@@ -29,5 +29,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query (omitted -> rows-only check)."""
+    """DuckDB-equivalent SQL for every query."""
     return oracle_sql_map()

@@ -34,8 +34,12 @@ TESTDATA_TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Shuffle partitions when nothing else sizes them: the local core count the
+# driver exports, 32 without it.
+DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
 # Confs every query depends on for correctness/determinism, all of which are
-# runtime-settable. ``get_spark()`` (session.py) sets these at build time, but
+# runtime-settable. ``get_spark()`` (session.py) builds with this dict, but
 # any externally-built SparkSession (e.g. a test harness constructing a vanilla
 # ``SparkSession.builder.getOrCreate()``) must get them too, so the catalog —
 # the single choke point every table read goes through — applies them at read
@@ -69,8 +73,7 @@ def ensure_session_confs(spark: SparkSession) -> None:
             pass
     try:
         if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-            cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-            spark.conf.set("spark.sql.shuffle.partitions", cpus)
+            spark.conf.set("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
     except Exception:  # pragma: no cover
         pass
 
@@ -170,13 +173,6 @@ def _ts_convert_sql(field) -> str | None:
     if t == "timestamp_ntz":
         return f"cast({field.name} as timestamp)"
     return None
-
-
-def _is_nanos_field(field) -> bool:
-    md = field.metadata or {}
-    return bool(md.get("__nanos_as_long__")) or (
-        field.name == "ts" and field.dataType.simpleString() == "bigint"
-    )
 
 
 def _needs_normalize(df: DataFrame) -> bool:

@@ -343,8 +343,9 @@ def verify_jaccard_on_candidates(
     adversarial candidate density (the bench stress row: 945k pairs x
     ~50 shingles = 47M exploded rows) the explosion dominated the whole
     pipeline; the array form moves pairs + docs rows instead and won a
-    measured ~2x at x100 (scripts/ab_verify_arrays.py). Intersection is
-    over the 60-bit shingle ints (hashed_shingle_index), set-semantics;
+    measured ~2x at x100 (PERF.md "Round-10 (cont.): array-intersect
+    verify"). Intersection is over the 60-bit shingle ints
+    (hashed_shingle_index), set-semantics;
     the oracles replay the identical distinct-int join, so collisions —
     were one to occur — land the same on both engines. Per-doc array
     width is bounded by the doc's distinct-shingle count (corpus ~52;
@@ -428,7 +429,7 @@ def minhash_near_duplicates(
     docs. The previous shape checkpointed the full (id, shingle) index
     for its two consumers — at the x1000 corpus that is ~40 GB written
     and read back, and it dominated the pipeline: A/B
-    (scripts/ab_verify_recompute.py, identical pair sets asserted)
+    (commit 18c87d5, identical pair sets asserted)
     measured 12.6 s vs 20.2 s at x100 (1.6x), 112.8 s vs 207.5 s at
     x1000 (1.8x; 3.9x cold), with a worst case of +13% on the
     adversarial-density stress corpus where candidate docs approach the

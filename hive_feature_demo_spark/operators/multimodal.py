@@ -2,9 +2,9 @@
 
 Spark-side plumbing is real (BinaryType columns, metadata structs,
 Arrow-batched ``mapInPandas`` decode pipeline, partition-size awareness);
-the actual media decode is stubbed — image/audio libraries are not in this
-container (see ``decode_stub``). The schema/batching contract is what a real
-decoder would drop into.
+the actual media codec is synthetic — image/audio libraries are not in this
+container (see ``media_features_kernel``). The schema/batching contract is
+what a real decoder would drop into.
 """
 
 from __future__ import annotations
@@ -58,52 +58,13 @@ def asset_digests(assets: DataFrame) -> DataFrame:
     )
 
 
-def decode_stub(batch_max_bytes: int = 64 << 20):
-    """A ``mapInPandas`` decode kernel with the real batching contract.
-
-    A production decoder would replace ``_decode_one`` with e.g. PIL/ffmpeg
-    calls; the Spark-side shape — Arrow batches in, feature rows out,
-    bounded memory per batch — is what matters at scale. Raises
-    ``NotImplementedError`` for mime types needing absent libraries.
-    """
-
-    def _decode_one(content: bytes, mime: str) -> dict:
-        if mime == "text/plain":
-            text = content.decode("utf-8", errors="replace")
-            return {"kind": "text", "n_units": len(text.split())}
-        # image/audio/video decode needs PIL/soundfile/ffmpeg — not in this
-        # container by design; the pipeline contract is exercised with text.
-        raise NotImplementedError(f"no decoder for mime {mime!r}")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [_decode_one(c, m) for c, m in zip(pdf["content"], pdf["mime"])]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "kind": [f["kind"] for f in feats],
-                    "n_units": [f["n_units"] for f in feats],
-                }
-            )
-
-    return kernel
-
-
-DECODED_SCHEMA = "asset_id long, kind string, n_units long"
-
-
-def decode_assets(assets: DataFrame) -> DataFrame:
-    """Run the (stub) decoder over binary content, Arrow-batched."""
-    return _fan_out(assets).mapInPandas(decode_stub(), schema=DECODED_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # Media features with REAL pixel arithmetic. The codec step is synthetic —
 # no PIL/ffmpeg in this container, so "decoding" a payload means tiling its
 # bytes into an RGB buffer whose header dims derive from the content digest —
 # but everything DOWNSTREAM of decode is genuine image math on the decoded
 # buffer: NumPy mean/strip-pooling/per-frame luminance and a real bilinear
-# resize. A production decoder replaces ``_decode_rgb`` with the codec call
+# resize. A production decoder replaces the tiling step with the codec call
 # and keeps every other line. All buffer statistics are exact-integer sums
 # until one final IEEE division, so the DuckDB oracle replays them
 # bit-identically from byte prefix sums over the same payload.

@@ -62,11 +62,6 @@ def avg_token_len(toks: Column) -> Column:
     return total / F.greatest(F.size(toks), F.lit(1))
 
 
-def punct_count(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.length(F.regexp_replace(c, r"[^.,!?;:]", "")).cast("long")
-
-
 def quality_score(n_tokens: Column, stop_ratio: Column, avg_len: Column) -> Column:
     """Composite [0,1] quality heuristic (length / stopword / token-shape).
 

@@ -1681,7 +1681,7 @@ def q280_centroid_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 # form ran each round as a Spark job over the checkpointed 4096-row
 # table; the 60 x (join+agg+collect) jobs cost ~36 s of pure scheduling
 # at every SF (42.9 s total at sf0.1 vs 10.4 s now, bit-identical output
-# at sf0.001/0.01/0.1 — scripts/ab_pca.py). Round count: per-round error
+# at sf0.001/0.01/0.1 — PERF.md "Round-6 close"). Round count: per-round error
 # decays as (lambda2/lambda1)^k and the synthetic embeddings are
 # near-isotropic (gap ~ 1.07 at sf0.001), so 60 rounds reach cosine >
 # 0.99 to the true eigenvector (verified against numpy in tests); the
@@ -1783,7 +1783,7 @@ def q281_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decimal repr (BigDecimal.valueOf semantics = repr(x)), HALF_UP at
     # the 10th fractional digit. Summing the quantized products exactly
     # and casting back to double replays the previous per-round Spark agg
-    # term for term (bit-identical at all test SFs — scripts/ab_pca.py).
+    # term for term (bit-identical at all test SFs — PERF.md "Round-6 close").
     q10 = _PyDecimal("1e-10")
 
     def _dec10(x: float) -> "_PyDecimal":

@@ -10,8 +10,8 @@ byte sums until one final IEEE division, the DuckDB oracle replays them
 bit-identically: it reconstructs per-document byte prefix sums and evaluates
 the same tiled-range sums the kernel's buffers realize. The one genuinely
 interpolating op (bilinear resize, fractional weights) is not
-SQL-replayable; q121 registers it rows-only and pytest checks it against an
-independent per-pixel reference.
+SQL-replayable; q121 surfaces it as a bounds boolean the oracle asserts, and
+pytest checks the pixels against an independent per-pixel reference.
 """
 
 from __future__ import annotations

@@ -4,8 +4,8 @@ Contract (from the driver): every query is a callable
 ``(SparkSession, sf_dir) -> DataFrame``; the oracle is ANSI SQL DuckDB runs
 over the same parquet files (views pre-registered per table name). Column
 names must match exactly — the comparator sorts columns by name and hashes
-values. Queries whose semantics are not SQL-expressible (streaming state,
-LSH internals) register ``oracle=None`` and get a rows-only check.
+values. Every query registers a non-empty oracle; ``register`` rejects
+one without.
 """
 
 from __future__ import annotations
@@ -22,14 +22,17 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Query:
     name: str
     fn: QueryFn
-    oracle: str | None
+    oracle: str
     category: str
 
 
 REGISTRY: dict[str, Query] = {}
 
 
-def register(name: str, oracle: str | None = None, category: str = "relational"):
+def register(name: str, *, oracle: str, category: str = "relational"):
+    if not isinstance(oracle, str) or not oracle.strip():
+        raise ValueError(f"{name}: register() needs a non-empty oracle SQL string")
+
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
@@ -44,4 +47,4 @@ def queries_map() -> dict[str, QueryFn]:
 
 
 def oracle_sql_map() -> dict[str, str]:
-    return {name: q.oracle for name, q in sorted(REGISTRY.items()) if q.oracle}
+    return {name: q.oracle for name, q in sorted(REGISTRY.items())}

@@ -10,6 +10,8 @@ and a streaming run of one micro-batch replay agree by construction.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -230,27 +232,6 @@ def q43_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STREAM_RUN_SEQ = iter(range(10**6))
 
 
-def _streamed_events(spark: SparkSession, sf_dir: str):
-    # Probe the footer for the stored ts encoding (nanos-bigint vs µs-NTZ —
-    # it has shifted between rounds) and reuse the catalog's normalizer; a
-    # hardcoded LongType schema silently mis-scales µs-encoded files.
-    # ensure_session_confs BEFORE the probe: a virgin session can't even
-    # read a TIMESTAMP(NANOS) footer without nanosAsLong, and the
-    # normalizer's NTZ cast must not be analyzed under a non-UTC host zone
-    # (see normalize_event_times — r10 TZ sweep finding).
-    from hive_feature_demo_spark.catalog import ensure_session_confs, normalize_event_times
-
-    ensure_session_confs(spark)
-    probed = (
-        spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir).schema
-    )
-    return normalize_event_times(
-        spark.readStream.schema(probed)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-
-
 @register(
     "q48_streaming_tumbling",
     oracle=f"""
@@ -273,7 +254,9 @@ def q48_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its own 'flush' window never closes, so append never emits it.
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = sops.with_flush_sentinel(spark, sf_dir, _streamed_events(spark, sf_dir))
+    events = sops.with_flush_sentinel(
+        spark, sf_dir, sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
+    )
     agg = (
         events.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -307,7 +290,7 @@ def q48_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q49_streaming_dedup_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = _streamed_events(spark, sf_dir)
+    events = sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     deduped = sops.streaming_dedup(events, watermark="1 hour")
     name = f"q49_out_{next(_STREAM_RUN_SEQ)}"
     sops.run_to_memory(deduped, name, output_mode="append")
@@ -375,7 +358,7 @@ def q44_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q69_stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = _streamed_events(spark, sf_dir)
+    events = sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     joined = sops.click_purchase_join(events, horizon="30 minutes", watermark="10 minutes")
     out = joined.select(
         "user_id",
@@ -422,7 +405,7 @@ def q70_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = _streamed_events(spark, sf_dir)
+    events = sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     totals = sops.running_user_totals(events, quantize_digits=4)
     name = f"q70_out_{next(_STREAM_RUN_SEQ)}"
     sops.run_to_memory(totals, name, output_mode="update")
@@ -470,7 +453,9 @@ def q96_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replay. See q48 for the state-growth rationale.
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = sops.with_flush_sentinel(spark, sf_dir, _streamed_events(spark, sf_dir))
+    events = sops.with_flush_sentinel(
+        spark, sf_dir, sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
+    )
     agg = (
         events.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
@@ -526,7 +511,9 @@ def q108_streaming_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.catalog import table as _table
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = sops.with_flush_sentinel(spark, sf_dir, _streamed_events(spark, sf_dir))
+    events = sops.with_flush_sentinel(
+        spark, sf_dir, sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
+    )
     dim = _table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     enriched = sops.enrich_with_dimension(
@@ -616,7 +603,7 @@ def q108_streaming_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q130_stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = _streamed_events(spark, sf_dir)
+    events = sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     joined = sops.click_purchase_join(
         events, horizon="30 minutes", watermark="10 minutes", how="leftOuter"
     )
@@ -670,7 +657,7 @@ def q130_stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q158_stream_stream_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = _streamed_events(spark, sf_dir)
+    events = sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     joined = sops.click_purchase_join(
         events, horizon="30 minutes", watermark="10 minutes", how="leftSemi"
     )
@@ -736,7 +723,7 @@ def q158_stream_stream_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q131_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = _streamed_events(spark, sf_dir)
+    events = sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     # one driver-side scalar (parquet footer stats make this a metadata
     # read): where to place the watermark-advancing flush row — built
     # engine-side in epoch-micros (host-TZ-proof; see _sentinel_stream)
@@ -830,7 +817,9 @@ def q131_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFram
 def q136_stateful_sessions_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = _streamed_events(spark, sf_dir).select("event_id", "ts", "user_id", "value")
+    events = sops.events_stream(spark, os.path.join(sf_dir, "events.parquet")).select(
+        "event_id", "ts", "user_id", "value"
+    )
     sessions = sops.stateful_sessions(
         events, gap_minutes=_GAP_MIN, watermark="30 minutes", quantize_digits=4
     )
@@ -889,7 +878,9 @@ if _HAS_TWS_DEPS:
     ) -> DataFrame:
         from hive_feature_demo_spark.streaming import ops as sops
 
-        events = _streamed_events(spark, sf_dir).select("user_id", "value")
+        events = sops.events_stream(spark, os.path.join(sf_dir, "events.parquet")).select(
+            "user_id", "value"
+        )
         totals = sops.transform_with_state_totals(events)
         name = f"q146_out_{next(_STREAM_RUN_SEQ)}"
         prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
@@ -939,15 +930,14 @@ if _HAS_TWS_DEPS:
     category="streaming",
 )
 def q152_foreachbatch_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from hive_feature_demo_spark.streaming import ops as sops
 
     base = scratch_dir(prefix="hfd_q152_")
     out_dir = os.path.join(base, "landed")
     ledger = os.path.join(base, "ledger")
-    events = _streamed_events(spark, sf_dir).select("event_id", "event_type", "value")
+    events = sops.events_stream(spark, os.path.join(sf_dir, "events.parquet")).select(
+        "event_id", "event_type", "value"
+    )
     sops.run_foreach_batch_parquet(events, out_dir, ledger)
     back = spark.read.parquet(out_dir)
     return (
@@ -993,7 +983,7 @@ def q152_foreachbatch_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
 def q168_streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = _streamed_events(spark, sf_dir)
+    events = sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     keyed = events.select(
         "user_id", "event_type", F.date_trunc("minute", "ts").alias("m"), "ts"
     )
@@ -1133,7 +1123,7 @@ def q245_streaming_dynamic_gap_sessions(
 ) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = _streamed_events(spark, sf_dir)
+    events = sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     # engine-side epoch-micros sentinel (host-TZ-proof; see _sentinel_stream)
     flush_stream = sops._sentinel_stream(
         spark, sf_dir, scratch_dir(prefix="q245_flush_")

@@ -12,7 +12,6 @@ needs several), and their oracles replay the micro-batch structure in SQL
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -22,10 +21,7 @@ from hive_feature_demo_spark.functions.numeric import sql_exact_sum, sql_hex_to_
 from hive_feature_demo_spark.functions.temporal import epoch_micros
 from hive_feature_demo_spark.scratch import scratch_dir
 from hive_feature_demo_spark.plans.registry import register
-from hive_feature_demo_spark.plans.streaming_batch import (
-    _STREAM_RUN_SEQ,
-    _streamed_events,
-)
+from hive_feature_demo_spark.plans.streaming_batch import _STREAM_RUN_SEQ
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
@@ -200,13 +196,6 @@ def q192_streaming_update_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _with_flush(spark: SparkSession, sf_dir: str, events_stream: DataFrame):
-    """Shared flush-sentinel replay protocol — see streaming.ops.with_flush_sentinel."""
-    from hive_feature_demo_spark.streaming.ops import with_flush_sentinel
-
-    return with_flush_sentinel(spark, sf_dir, events_stream)
-
-
 # ---------------------------------------------------------------------------
 # q196 — REAL stream-stream FULL OUTER join run, completing the join-type
 # matrix (inner q69, leftOuter q130, leftSemi q158). Null-padded rows
@@ -280,7 +269,7 @@ def _with_flush(spark: SparkSession, sf_dir: str, events_stream: DataFrame):
 def q196_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = _streamed_events(spark, sf_dir)
+    events = sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     joined = sops.click_purchase_join(
         events, horizon="30 minutes", watermark="10 minutes", how="fullOuter"
     )
@@ -333,7 +322,9 @@ def q196_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame
 def q193_chained_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = _with_flush(spark, sf_dir, _streamed_events(spark, sf_dir))
+    events = sops.with_flush_sentinel(
+        spark, sf_dir, sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
+    )
     sub = (
         events.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
@@ -386,7 +377,9 @@ def q193_chained_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q194_streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = _with_flush(spark, sf_dir, _streamed_events(spark, sf_dir))
+    events = sops.with_flush_sentinel(
+        spark, sf_dir, sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
+    )
     deduped = (
         events.withWatermark("ts", "30 minutes")
         .withColumn("hour_start", F.date_trunc("hour", "ts"))
@@ -458,7 +451,8 @@ def q212_stream_static_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.window("ts", "1 hour").alias("w"), "event_type"
         ).agg(F.count("*").alias(out_col))
 
-    events = _with_flush(spark, sf_dir, _streamed_events(spark, sf_dir))
+    path = os.path.join(sf_dir, "events.parquet")
+    events = sops.with_flush_sentinel(spark, sf_dir, sops.events_stream(spark, path))
     member = _windowed(
         events.withWatermark("ts", "30 minutes").join(
             F.broadcast(optin), F.col("user_id") == optin.c_custkey, "left_semi"
@@ -466,7 +460,7 @@ def q212_stream_static_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
     )
     other = _windowed(
-        _with_flush(spark, sf_dir, _streamed_events(spark, sf_dir))
+        sops.with_flush_sentinel(spark, sf_dir, sops.events_stream(spark, path))
         .withWatermark("ts", "30 minutes")
         .join(F.broadcast(optin), F.col("user_id") == optin.c_custkey, "left_anti"),
         "n",
@@ -559,7 +553,9 @@ def q310_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.plans.sketch_ops import _HLL_ALPHA, _HLL_M, with_hll_reg_rank
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = _with_flush(spark, sf_dir, _streamed_events(spark, sf_dir))
+    events = sops.with_flush_sentinel(
+        spark, sf_dir, sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
+    )
     ranked = with_hll_reg_rank(events, "user_id")
     level1 = (
         ranked.withWatermark("ts", "30 minutes")
@@ -709,7 +705,9 @@ def q322_streaming_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFram
     )
     scd = v1.unionByName(v2)
 
-    events = sops.with_flush_sentinel(spark, sf_dir, _streamed_events(spark, sf_dir))
+    events = sops.with_flush_sentinel(
+        spark, sf_dir, sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
+    )
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     enriched = (
         events.withWatermark("ts", "30 minutes")

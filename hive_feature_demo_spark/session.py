@@ -14,6 +14,14 @@ Scale notes (local[N] here, 1000-executor cluster in production):
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle (DuckDB timestamps are UTC-naive).
 - Arrow enabled: every pandas UDF / toPandas crossing is Arrow-batched.
+- Shuffle/spill/broadcast codec left at Spark's default, lz4 (PERF.md
+  "Round-12 session 3: shuffle-codec A/B" and "Round-13: shuffle-codec A/B
+  at the ×1000 tier"). zstd halved q02/q64 at x100 under IO pressure (q02
+  min 7.7 s vs 16.4 s, q64 7.3 vs 10.0, q86 wash) but cost a consistent ~8%
+  on the CPU-bound sf0.1 headline suite (lz4 49.4/50.5 s vs zstd
+  53.6/55.1 s interleaved), and lz4 won every ×1000 pair on the dedup
+  tier. On network/disk-bound clusters where shuffle bytes, not codec CPU,
+  are the wall, pass ``extra_conf={"spark.io.compression.codec": "zstd"}``.
 """
 
 from __future__ import annotations
@@ -22,7 +30,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from hive_feature_demo_spark.catalog import _RUNTIME_CONFS, DEFAULT_SHUFFLE_PARTITIONS
 
 
 def get_spark(
@@ -82,25 +90,6 @@ def get_spark(
         # (threshold-immune), tiny sides are under 8MB anyway, and AQE
         # still locally converts when runtime sizes allow.
         .config("spark.sql.autoBroadcastJoinThreshold", "8MB")
-        # Shuffle/spill/broadcast codec, parameterised (r12 A/B,
-        # scripts/ab_shuffle_codec.py): zstd halved q02/q64 at x100 under
-        # IO pressure (q02 min 7.7 s vs 16.4 s, q64 7.3 vs 10.0, q86 wash)
-        # but cost a consistent ~8% on the CPU-bound sf0.1 headline suite
-        # (lz4 49.4/50.5 s vs zstd 53.6/55.1 s interleaved). Local default
-        # stays lz4 (Spark's default — keeps the driver's bench
-        # comparable); set SPARK_GRAFT_IO_CODEC=zstd on network/disk-bound
-        # clusters where shuffle bytes, not codec CPU, are the wall.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
-        .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
-        # the driver's events table stores TIMESTAMP(NANOS) which the Spark
-        # parquet reader rejects; read as long and convert in the catalog
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         # 16g deliberately: a 48g heap was trialed for the x1000 corpus
         # and REGRESSED heavy shuffles in long-lived sessions (q02 x100
@@ -118,6 +107,10 @@ def get_spark(
         # to local disk and re-read cheaply; stalled aggregations do not.
         .config("spark.memory.storageFraction", "0.3")
     )
+    # timezone, arrow, parquet rebase and nanosAsLong: the same confs the
+    # catalog applies to sessions built elsewhere
+    for k, v in _RUNTIME_CONFS.items():
+        builder = builder.config(k, v)
     if hive:
         wh = warehouse_dir or os.path.join(os.getcwd(), "spark-warehouse")
         builder = (

@@ -13,6 +13,8 @@ state finite; stream-static joins re-broadcast the dimension per micro-batch.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,12 +48,22 @@ def events_stream(
     lands every event in January 1970 with no error). So: one driver-side
     batch probe of the parquet footer picks the schema, and the shared
     catalog normalizer applies the matching conversion.
+
+    ``path`` is a directory (or glob) of parquet files, or one parquet
+    file. Spark's file stream source only takes directories, so a file is
+    streamed as its directory filtered to the file's name.
     """
     from ..catalog import ensure_session_confs, normalize_event_times
 
-    ensure_session_confs(spark)  # nanosAsLong etc. for externally-built sessions
-    probed = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(probed)
+    opts = {}
+    if os.path.isfile(path):
+        path, opts["pathGlobFilter"] = os.path.split(path)
+    # confs BEFORE the probe: a virgin session can't read a TIMESTAMP(NANOS)
+    # footer without nanosAsLong, and the normalizer's NTZ cast must not be
+    # analyzed under a non-UTC host zone (see normalize_event_times)
+    ensure_session_confs(spark)
+    probed = spark.read.options(**opts).parquet(path).schema
+    reader = spark.readStream.options(**opts).schema(probed)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return normalize_event_times(reader.parquet(path))
@@ -71,20 +83,6 @@ def tumbling_counts(
             "n_events",
             "total_value",
         )
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    window: str = "2 hours",
-    slide: str = "1 hour",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
     )
 
 

@@ -33,6 +33,7 @@ def main() -> int:
     only = argv[1:]
 
     import __spark_entry__ as entry
+    from hive_feature_demo_spark.catalog import DEFAULT_SHUFFLE_PARTITIONS
     from tests import oracle
 
     # Deliberately NO confs here — this is the point of the simulation.
@@ -41,7 +42,7 @@ def main() -> int:
     # suite can't see ANSI hazards like arithmetic wraps or implicit-cast
     # strictness; this flag makes an ANSI sweep one env var away).
     builder = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        SparkSession.builder.master(f"local[{DEFAULT_SHUFFLE_PARTITIONS}]")
         .appName("bare-session-check")
         .config("spark.ui.enabled", "false")
     )
@@ -60,25 +61,20 @@ def main() -> int:
     oracles = entry.oracle_sql()
 
     results: dict[str, dict] = {}
-    n_pass = n_fail = n_err = n_rows_only = 0
+    n_pass = n_fail = n_err = 0
     for name, fn in sorted(queries.items()):
         if only and not any(name.startswith(p) for p in only):
             continue
         t0 = time.time()
         try:
             df = fn(spark, sf_dir)
-            if name in oracles:
-                problems = oracle.compare(df, con, oracles[name])
-                if not problems:
-                    n_pass += 1
-                    results[name] = {"status": "pass"}
-                else:
-                    n_fail += 1
-                    results[name] = {"status": "FAIL", "msg": "; ".join(problems)[:500]}
+            problems = oracle.compare(df, con, oracles[name])
+            if not problems:
+                n_pass += 1
+                results[name] = {"status": "pass"}
             else:
-                n_rows = df.count()
-                n_rows_only += 1
-                results[name] = {"status": "rows-only", "rows": n_rows}
+                n_fail += 1
+                results[name] = {"status": "FAIL", "msg": "; ".join(problems)[:500]}
         except Exception:
             n_err += 1
             results[name] = {"status": "ERR", "err": traceback.format_exc()[-800:]}
@@ -95,7 +91,6 @@ def main() -> int:
                 "pass": n_pass,
                 "fail": n_fail,
                 "err": n_err,
-                "rows_only": n_rows_only,
                 "sf_dir": sf_dir,
                 "tz": os.environ.get("TZ") or "host-default",
             }

@@ -37,11 +37,9 @@ def main() -> int:
         t0 = time.time()
         rows = q.fn(spark, sf_dir).collect()
         t_spark = time.time() - t0
-        t_oracle = float("nan")
-        if q.oracle is not None:
-            t0 = time.time()
-            con.sql(q.oracle).fetchall()
-            t_oracle = time.time() - t0
+        t0 = time.time()
+        con.sql(q.oracle).fetchall()
+        t_oracle = time.time() - t0
         print(f"{name:42s} {t_spark:8.2f} {t_oracle:9.2f} {len(rows):8d}")
     return 0
 

@@ -49,20 +49,15 @@ def main() -> int:
         }
         try:
             df = q.fn(spark, sf_dir)
-            if q.oracle is None:
-                rec["spark_rows"] = df.count()
-                rec["err"] = "NO ORACLE (rows-only)"
-            else:
-                problems = compare(df, con, q.oracle)
-                ok = not problems
-                rec.update(
-                    rows_match=not any("row count" in p for p in problems),
-                    schema_match=not any("columns differ" in p for p in problems),
-                    hash_match=ok,
-                )
-                if problems:
-                    n_fail += 1
-                    rec["err"] = "; ".join(p[:300] for p in problems)
+            problems = compare(df, con, q.oracle)
+            rec.update(
+                rows_match=not any("row count" in p for p in problems),
+                schema_match=not any("columns differ" in p for p in problems),
+                hash_match=not problems,
+            )
+            if problems:
+                n_fail += 1
+                rec["err"] = "; ".join(p[:300] for p in problems)
         except Exception:
             n_fail += 1
             rec["err"] = traceback.format_exc()[-1500:]

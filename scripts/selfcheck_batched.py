@@ -128,7 +128,7 @@ def main() -> int:
         finally:
             os.unlink(tmp)
         n_bad = sum(
-            1 for n in batch if merged.get(n, {}).get("status") not in ("pass", "rows-only")
+            1 for n in batch if merged.get(n, {}).get("status") != "pass"
         )
         print(
             f"[{bi + 1}/{len(batches)}] {label}: "
@@ -136,7 +136,7 @@ def main() -> int:
             flush=True,
         )
 
-    counts = {"pass": 0, "FAIL": 0, "ERR": 0, "rows-only": 0}
+    counts = {"pass": 0, "FAIL": 0, "ERR": 0}
     for rec in merged.values():
         counts[rec.get("status", "ERR")] = counts.get(rec.get("status", "ERR"), 0) + 1
     summary = {
@@ -163,7 +163,6 @@ def main() -> int:
         "pass": counts["pass"],
         "fail": counts["FAIL"],
         "err": counts["ERR"],
-        "rows_only": counts["rows-only"],
         "total_sec": round(time.time() - t_start, 1),
         "results": merged,
     }
@@ -171,7 +170,7 @@ def main() -> int:
         json.dump(summary, f, indent=2)
     print(
         f"{counts['pass']} pass / {counts['FAIL']} fail / {counts['ERR']} err "
-        f"/ {counts['rows-only']} rows-only -> {out_path}"
+        f"-> {out_path}"
     )
     return 1 if counts["FAIL"] or counts["ERR"] else 0
 

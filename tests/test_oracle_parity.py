@@ -1,4 +1,4 @@
-"""Every registered query with an oracle must hash-match DuckDB at sf0.001.
+"""Every registered query must hash-match its DuckDB oracle at sf0.001.
 
 This is the same gate the driver runs at sf0.01 (CORRECTNESS_r{N}.json),
 replicated locally so regressions surface immediately.
@@ -10,21 +10,27 @@ import pytest
 
 from hive_feature_demo_spark.plans import REGISTRY
 
-_WITH_ORACLE = sorted(name for name, q in REGISTRY.items() if q.oracle)
 
-
-@pytest.mark.parametrize("name", _WITH_ORACLE)
+@pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_oracle_parity(name, registry_sweep):
     rec = registry_sweep[name]
     assert rec["error"] is None, f"{name} failed to run: {rec['error']}"
     assert not rec["problems"], f"{name}: " + " | ".join(rec["problems"])
 
 
+@pytest.mark.parametrize("kwargs", [{}, {"oracle": None}, {"oracle": ""}, {"oracle": " \n "}])
+def test_register_requires_an_oracle(kwargs):
+    from hive_feature_demo_spark.plans.registry import register
+
+    with pytest.raises((TypeError, ValueError)):
+        register("q_no_oracle", **kwargs)
+    assert "q_no_oracle" not in REGISTRY
+
+
 def test_all_queries_return_rows(registry_sweep):
     # every query must at least build and run (the sweep fully executes
-    # each one via the oracle compare / limit(1) fallback); emptiness is
-    # allowed only for queries whose semantics can legitimately produce
-    # zero rows
+    # each one via the oracle compare); emptiness is allowed only for
+    # queries whose semantics can legitimately produce zero rows
     for name, q in sorted(REGISTRY.items()):
         rec = registry_sweep[name]
         assert rec["error"] is None, f"{name} failed to run: {rec['error']}"

@@ -50,13 +50,7 @@ def test_stream_equals_batch_tumbling(spark, sf_dir, tmp_path):
     from hive_feature_demo_spark.catalog import table
     from hive_feature_demo_spark.plans.streaming_batch import q40_tumbling_hourly
 
-    # the file source needs a directory; stage the single parquet file
-    import shutil
-
-    stage = str(tmp_path / "events_dir")
-    os.makedirs(stage, exist_ok=True)
-    shutil.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(stage, "events.parquet"))
-    stream = ops.events_stream(spark, stage)
+    stream = ops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     agg = ops.tumbling_counts(stream, watermark="10 minutes")
     ops.run_to_memory(agg, "t_tumble", output_mode="complete")
     got = {
@@ -71,6 +65,24 @@ def test_stream_equals_batch_tumbling(spark, sf_dir, tmp_path):
         for r in q40_tumbling_hourly(spark, sf_dir).collect()
     }
     assert got == want
+
+
+def test_events_stream_file_path_equals_directory(spark, sf_dir, tmp_path):
+    """A single parquet file streams exactly like a directory holding only
+    that file — the file's siblings (nine other tables in ``sf_dir``) are
+    filtered out, not read."""
+    import shutil
+
+    stage = str(tmp_path / "events_dir")
+    os.makedirs(stage)
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), stage)
+    got = {}
+    for label, path in (("file", os.path.join(sf_dir, "events.parquet")), ("dir", stage)):
+        ops.run_to_memory(ops.events_stream(spark, path), f"t_events_{label}", once=True)
+        got[label] = spark.table(f"t_events_{label}")
+    assert got["file"].columns == got["dir"].columns
+    assert got["file"].count() > 0
+    assert sorted(got["file"].collect()) == sorted(got["dir"].collect())
 
 
 def test_watermark_drops_late_events(spark, tmp_path):
