@@ -281,8 +281,10 @@ def lsh_candidate_pairs(
     for bi in range(bands):
         cols = [F.col(f"mh_{bi * rows + r}") for r in range(rows)]
         for j in range(0, rows - 1, 2):
+            # widen first: on an IntegerType signature shiftleft wraps in 32
+            # bits (Catalyst drops the cast on long inputs)
             packed_cols.append(
-                (F.shiftleft(cols[j], 31) + cols[j + 1]).alias(f"bk_{bi}_{j // 2}")
+                (F.shiftleft(cols[j].cast("long"), 31) + cols[j + 1]).alias(f"bk_{bi}_{j // 2}")
             )
         if rows % 2:
             packed_cols.append(cols[-1].alias(f"bk_{bi}_{rows // 2}"))

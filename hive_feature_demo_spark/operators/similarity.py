@@ -155,10 +155,9 @@ def pairwise_dim_terms(
     results are bit-identical to the join formulation (same product
     multiset) — pinned by tests/test_numeric_properties.py.
     """
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
+    from hive_feature_demo_spark.operators.skew import fan_out_scan
+
+    df = fan_out_scan(df)
     keep = keep or []
     e = df.select(*keep, F.col(vec_col).cast("array<double>").alias("_e"))
     d1 = e.select(*keep, "_e", F.posexplode("_e").alias("_pos", "xi"))
@@ -175,10 +174,9 @@ def dim_terms(
 ) -> DataFrame:
     """Single-dimension expansion ``(i, xi)`` per row (first-moment pass),
     with the same narrow-input widening as :func:`pairwise_dim_terms`."""
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
+    from hive_feature_demo_spark.operators.skew import fan_out_scan
+
+    df = fan_out_scan(df)
     keep = keep or []
     return df.select(
         *keep, F.posexplode(F.col(vec_col).cast("array<double>")).alias("_pos", "xi")

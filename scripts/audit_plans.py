@@ -1,8 +1,7 @@
 """Registry-wide physical-plan anti-pattern audit (r12).
 
-Generalizes the r11 Expand audit (scripts/audit_expand.py) to the other
-shapes that hurt at 100 TB. For every registered query's plan (built at a
-small SF, never executed) it reports:
+For every registered query's plan (built at a small SF, never executed)
+it reports the shapes that hurt at 100 TB:
 
 - ``cartesian``: CartesianProduct nodes, classified ``scalar`` when either
   input subtree is a global aggregate (``HashAggregate(keys=[]`` -> 1 row,
@@ -18,6 +17,12 @@ small SF, never executed) it reports:
 - ``nested_exchange``: an Exchange whose subtree contains another Exchange
   over the SAME normalized keys with only partitioning-preserving unary
   nodes (Project/Filter/Sort) between them — a redundant shuffle;
+- ``expand``: Expand nodes, each with its immediate ``child``, the
+  ``joins_below`` it and a ``kind``: ``grouping_sets`` (rollup/cube/grouping
+  sets NEED the Expand), ``count_distinct`` (a rewrite candidate when a fact
+  join feeds it) or ``other``. Catalyst never pushes aggregates below joins,
+  so an Expand over joined fact rows pays its xN on every joined row; a
+  HashAggregate child means it multiplies bounded pre-aggregated rows;
 - ``n_exchange`` / ``n_smj`` / ``n_sort``: census counts for the PERF.md
   top-offenders table.
 
@@ -173,6 +178,17 @@ def _exchange_keys(body: str) -> str | None:
     return ",".join(sorted(set(cols))) if cols else None
 
 
+def _expand_kind(body: str) -> str:
+    """Classify an Expand by the attribute its rule appends to each
+    projection: ``spark_grouping_id`` (ResolveGroupingAnalytics) or ``gid``
+    (RewriteDistinctAggregates)."""
+    if "spark_grouping_id#" in body:
+        return "grouping_sets"
+    if re.search(r"\bgid#\d+", body):
+        return "count_distinct"
+    return "other"
+
+
 def _audit_plan(plan: str) -> dict:
     nodes = _parse_nodes(plan)
     res: dict = {
@@ -180,6 +196,7 @@ def _audit_plan(plan: str) -> dict:
         "bnlj": [],
         "smj_dim": [],
         "nested_exchange": [],
+        "expand": [],
         "n_exchange": 0,
         "n_smj": 0,
         "n_sort": 0,
@@ -240,6 +257,15 @@ def _audit_plan(plan: str) -> dict:
                     "children": [t[0]["name"] if t else "?" for t in sides],
                 }
             )
+        elif name.startswith("Expand"):
+            sub = _subtree(nodes, i)
+            res["expand"].append(
+                {
+                    "kind": _expand_kind(n["body"]),
+                    "child": sub[0]["name"] if sub else None,
+                    "joins_below": [m["name"] for m in sub if "Join" in m["name"]],
+                }
+            )
         elif name.startswith("Sort"):
             res["n_sort"] += 1
     return res
@@ -292,6 +318,10 @@ def main() -> int:
             )
         for c in r["nested_exchange"]:
             flagged.setdefault(name, []).append(f"nested_exchange keys={c['keys']}")
+        for c in r["expand"]:
+            flagged.setdefault(name, []).append(
+                f"expand kind={c['kind']} child={c['child']} joins_below={c['joins_below']}"
+            )
 
     census = sorted(
         (

@@ -17,6 +17,7 @@ from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from hive_feature_demo_spark.catalog import TESTDATA_TABLES  # noqa: E402
 from hive_feature_demo_spark.plans import REGISTRY  # noqa: E402
 from hive_feature_demo_spark.session import get_spark  # noqa: E402
 
@@ -64,15 +65,19 @@ def full_width_scans(
     plan: str, widths: dict[str, int], min_width: int
 ) -> list[tuple[str, int, int, str]]:
     """(table, read_cols, table_cols, pushed) for each scan of a
-    ``min_width``-plus-column table that reads EVERY column."""
+    ``min_width``-plus-column table that reads EVERY column.
+
+    A scan whose Location names no testdata table (a scratch round trip,
+    data/fans.parquet) is skipped; one that names several tables raises,
+    since no single width applies to it."""
     out = []
     for chunk in _scan_chunks(plan):
         loc = re.search(r"^Location: .*$", chunk, re.M)
-        # multi-path InMemoryFileIndex locations list several paths; only a
-        # single-table location can be attributed to one width
         tables = set(_LOC_TABLE_RE.findall(loc.group(0) + ",")) if loc else set()
-        if len(tables) != 1:
+        if not tables & set(TESTDATA_TABLES):
             continue
+        if len(tables) > 1:
+            raise ValueError(f"scan Location names several tables: {sorted(tables)}")
         table = next(iter(tables))
         pushed_m = re.search(r"^PushedFilters: (\[.*\])", chunk, re.M)
         pushed = pushed_m.group(1) if pushed_m else "[]"

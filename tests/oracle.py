@@ -51,6 +51,13 @@ def canonical_rows(cols: list[str], rows: list[tuple]) -> list[tuple[str, ...]]:
 
 def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> list[str]:
     """Return a list of mismatch descriptions (empty == match)."""
+    return compare_counts(spark_df, con, sql)[0]
+
+
+def compare_counts(
+    spark_df, con: duckdb.DuckDBPyConnection, sql: str
+) -> tuple[list[str], int, int]:
+    """:func:`compare` plus the Spark and oracle row counts it collected."""
     problems: list[str] = []
     s_cols = list(spark_df.columns)
     s_rows = [tuple(r) for r in spark_df.collect()]
@@ -60,7 +67,7 @@ def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> list[str]:
 
     if sorted(s_cols) != sorted(d_cols):
         problems.append(f"columns differ: spark={sorted(s_cols)} duckdb={sorted(d_cols)}")
-        return problems
+        return problems, len(s_rows), len(d_rows)
     if len(s_rows) != len(d_rows):
         problems.append(f"row count differs: spark={len(s_rows)} duckdb={len(d_rows)}")
     sc = canonical_rows(s_cols, s_rows)
@@ -77,4 +84,4 @@ def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> list[str]:
             + (f" (+{trailing} unaligned trailing rows)" if trailing else "")
             + f"; sample={sample}; spark-only={extra_s}; duckdb-only={extra_d}"
         )
-    return problems
+    return problems, len(s_rows), len(d_rows)

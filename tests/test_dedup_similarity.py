@@ -461,6 +461,28 @@ def test_packed_band_key_matches_md5_digest_candidates(docs_df):
     assert got, "corpus must produce at least one candidate pair"
 
 
+def test_packed_band_key_int_signatures_match_long(spark):
+    """The band key packs two minhashes as ``hi << 31 + lo``. On an
+    IntegerType signature that shift wraps in 32 bits, so docs whose band
+    heads differ by an even amount land in one bucket. Docs 1 and 2 share
+    no band, doc 3 equals doc 1: int- and long-typed signatures must give
+    the same candidate pairs, {(1, 3)}."""
+    base = [1000 + 7 * k for k in range(16)]
+    other = [v + 2 if k % 4 == 0 else v for k, v in enumerate(base)]
+    rows = [(1, *base), (2, *other), (3, *base)]
+    mh = ", ".join(f"mh_{k} {{t}}" for k in range(16))
+    pairs = {
+        t: {
+            (r["id_a"], r["id_b"])
+            for r in dedup.lsh_candidate_pairs(
+                spark.createDataFrame(rows, f"doc_id long, {mh.format(t=t)}"), "doc_id"
+            ).collect()
+        }
+        for t in ("int", "long")
+    }
+    assert pairs["int"] == pairs["long"] == {(1, 3)}
+
+
 def test_auto_collapse_probe_statistic_is_exact(spark):
     """r13: the collapse_exact='auto' probe is an EXACT distinct count
     over the 64-bit digest of the whitespace-collapsed text — not an HLL

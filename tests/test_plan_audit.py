@@ -3,7 +3,7 @@
 scripts/audit_plans.py classifies every registered query's physical plan
 for the shapes that hurt at 100 TB (CartesianProduct, non-bounded
 BroadcastNestedLoopJoin, dim-side SortMergeJoin, nested same-key
-Exchange). This test pins its verdicts: the set of flagged queries must
+Exchange, Expand). This test pins its verdicts: the set of flagged queries must
 stay within the documented allowlist (PERF.md round-12 table), so a new
 query or a rewrite cannot silently introduce an unreviewed cartesian or
 a redundant shuffle. Runs plan-building only — nothing executes.
@@ -19,6 +19,7 @@ sys.path.insert(
 )
 
 from audit_plans import _audit_plan  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
 from hive_feature_demo_spark.plans import REGISTRY
 
@@ -51,6 +52,21 @@ SMJ_DIM_ALLOWED = {
     # FULL OUTER is unsupported by BroadcastHashJoin; SMJ is the only
     # strategy, and both sides are dims
     "q75_full_outer_reconcile",
+}
+# Expand keeps (PERF.md "Round-11: registry-wide Expand audit"). Rollup/
+# cube/grouping-sets queries are pre-aggregated to their finest grouping
+# set, so the Expand multiplies a bounded aggregate, never fact rows.
+EXPAND_PREAGGREGATED = {
+    "q04_region_rollup",
+    "q09_status_priority_cube",
+    "q52_grouping_sets",
+}
+EXPAND_ALLOWED = {
+    # each event belongs to 2 overlapping hourly windows: the Expand IS
+    # the operator
+    "q41_sliding_2h_1h",
+    # unpivot is definitionally row expansion
+    "q147_unpivot_measures",
 }
 
 
@@ -109,3 +125,28 @@ def test_registry_scan_pruning_within_allowlist(spark, registry_sweep):
             if (name, table) not in FULL_WIDTH_ALLOWED:
                 bad.append((name, table, f"{ncols}/{w}"))
     assert not bad, f"un-allowlisted full-width scans: {bad}"
+
+
+def test_registry_expand_within_allowlist(spark, registry_sweep):
+    """Only the documented queries plan an Expand, and every grouping-sets
+    Expand is fed by a HashAggregate. q91's three COUNT(DISTINCT)-shaped
+    aggregates are a per-user MAX(flag) pre-aggregate: no Expand at all."""
+    expands = {}
+    for name in sorted(REGISTRY):
+        rec = registry_sweep[name]
+        assert rec["error"] is None, f"{name} failed to plan: {rec['error']}"
+        found = _audit_plan(rec["simple"])["expand"]
+        if found:
+            expands[name] = found
+    unexpected = set(expands) - EXPAND_PREAGGREGATED - EXPAND_ALLOWED
+    assert not unexpected, f"un-allowlisted Expand: {unexpected}"
+    assert "q91_retention_cohorts" not in expands
+    for name in EXPAND_PREAGGREGATED:
+        assert [e["kind"] for e in expands.get(name, [])] == ["grouping_sets"], name
+        assert expands[name][0]["child"] == "HashAggregate", expands[name]
+    # the classifier tells a multi-column COUNT(DISTINCT) Expand apart
+    df = spark.range(8).selectExpr("id % 2 AS k", "id % 3 AS a", "id AS b")
+    plan = df.groupBy("k").agg(F.countDistinct("a"), F.countDistinct("b"))._jdf
+    mode = spark._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    kinds = [e["kind"] for e in _audit_plan(plan.queryExecution().explainString(mode))["expand"]]
+    assert kinds == ["count_distinct"], kinds

@@ -681,63 +681,6 @@ def _simple_plan(df) -> str:
     )
 
 
-def _expand_children(plan: str) -> list[str]:
-    """Immediate-input node name of every Expand in a simple-mode plan."""
-    lines = plan.splitlines()
-
-    def depth(line):
-        i = 0
-        while i < len(line) and line[i] in " :+-":
-            i += 1
-        return i if i < len(line.rstrip()) else None
-
-    out = []
-    for idx, line in enumerate(lines):
-        d = depth(line)
-        if d is None or not line[d:].lstrip("*(0123456789) ").startswith("Expand"):
-            continue
-        for nxt in lines[idx + 1 :]:
-            d2 = depth(nxt)
-            if d2 is None:
-                continue
-            if d2 <= d:
-                break
-            out.append(nxt[d2:].lstrip("*(0123456789) ").split("(")[0].split("[")[0].strip())
-            break
-    return out
-
-
-def test_grouping_expands_fed_by_preaggregate(spark):
-    """r11 Expand audit: every rollup/cube/grouping-sets query whose Expand
-    sat on fact-scale input is pre-aggregated to its finest grouping set
-    first, so the Expand multiplies a bounded aggregate (<=|key domain|
-    rows), never raw/joined fact rows. The immediate Expand input must be
-    a HashAggregate."""
-    from hive_feature_demo_spark.plans.relational import (
-        q04_region_rollup,
-        q09_status_priority_cube,
-    )
-    from hive_feature_demo_spark.plans.relational_ext import q52_grouping_sets
-
-    for q in (q04_region_rollup, q09_status_priority_cube, q52_grouping_sets):
-        plan = _simple_plan(q(spark, SF_DIR))
-        children = _expand_children(plan)
-        assert children, f"{q.__name__}: rollup/cube should still plan an Expand\n{plan}"
-        assert all("HashAggregate" in c for c in children), (
-            f"{q.__name__}: Expand fed by {children}, want HashAggregate\n{plan}"
-        )
-
-
-def test_retention_cohorts_no_expand(spark):
-    """q91's three COUNT(DISTINCT user_id)-shaped aggregates are rewritten
-    as a per-user MAX(flag) pre-aggregate + per-cohort COUNT/SUM: no
-    Expand, no distinct shuffle of fact rows."""
-    from hive_feature_demo_spark.plans.stats import q91_retention_cohorts
-
-    plan = _simple_plan(q91_retention_cohorts(spark, SF_DIR))
-    assert "Expand" not in plan, plan
-
-
 def test_q296_threshold_grid_broadcast_no_cartesian(spark):
     """r12 plan audit (scripts/audit_plans.py): q296's 3-row threshold
     grid crossJoins the pair table and the documents scan. Un-hinted,
