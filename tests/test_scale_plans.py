@@ -11,12 +11,18 @@ skips fact partitions based on the dim side's selective filter).
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 
-import pytest
-from pyspark.sql import functions as F
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+)
 
-from hive_feature_demo_spark.catalog import table
+import pytest  # noqa: E402
+from audit_plans import _audit_plan  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
+from hive_feature_demo_spark.catalog import table  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -679,6 +685,38 @@ def _simple_plan(df) -> str:
     return df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )
+
+
+def test_grouping_expands_fed_by_preaggregate(spark):
+    """r11 Expand audit: every rollup/cube/grouping-sets query whose Expand
+    sat on fact-scale input is pre-aggregated to its finest grouping set
+    first, so the Expand multiplies a bounded aggregate (<=|key domain|
+    rows), never raw/joined fact rows. The immediate Expand input must be
+    a HashAggregate."""
+    from hive_feature_demo_spark.plans.relational import (
+        q04_region_rollup,
+        q09_status_priority_cube,
+    )
+    from hive_feature_demo_spark.plans.relational_ext import q52_grouping_sets
+
+    for q in (q04_region_rollup, q09_status_priority_cube, q52_grouping_sets):
+        plan = _simple_plan(q(spark, SF_DIR))
+        expands = _audit_plan(plan)["expand"]
+        assert expands, f"{q.__name__}: rollup/cube should still plan an Expand\n{plan}"
+        children = [e["child"] for e in expands]
+        assert all("HashAggregate" in c for c in children), (
+            f"{q.__name__}: Expand fed by {children}, want HashAggregate\n{plan}"
+        )
+
+
+def test_retention_cohorts_no_expand(spark):
+    """q91's three COUNT(DISTINCT user_id)-shaped aggregates are rewritten
+    as a per-user MAX(flag) pre-aggregate + per-cohort COUNT/SUM: no
+    Expand, no distinct shuffle of fact rows."""
+    from hive_feature_demo_spark.plans.stats import q91_retention_cohorts
+
+    plan = _simple_plan(q91_retention_cohorts(spark, SF_DIR))
+    assert "Expand" not in plan, plan
 
 
 def test_q296_threshold_grid_broadcast_no_cartesian(spark):
