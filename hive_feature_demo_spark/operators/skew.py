@@ -48,9 +48,7 @@ def salted_join(
     return out.drop(SALT_COL)
 
 
-def fan_out_scan(
-    df: DataFrame, *key_cols: str, assume_splits: int | None = None
-) -> DataFrame:
+def fan_out_scan(df: DataFrame, *key_cols: str) -> DataFrame:
     """Spread a narrow-but-expensive pipeline's input across the cluster.
 
     A small table often arrives as ONE parquet scan split (a few MB), so
@@ -64,13 +62,9 @@ def fan_out_scan(
     Probe cost: ``df.rdd.getNumPartitions()`` forces one analysis +
     physical-planning pass of the upstream plan (no execution). Every
     current call site probes a just-read table scan exactly once per
-    query, where that is microseconds; a caller sitting mid-pipeline on
-    a complex upstream plan — or inside an iterative loop — should pass
-    ``assume_splits`` (the known/estimated upstream split count, e.g.
-    from the source's file listing) to skip the probe entirely.
+    query, where that is microseconds.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    splits = assume_splits if assume_splits is not None else df.rdd.getNumPartitions()
-    if splits < target:
+    if df.rdd.getNumPartitions() < target:
         return df.repartition(target, *[F.col(c) for c in key_cols])
     return df

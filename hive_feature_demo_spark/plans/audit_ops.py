@@ -2000,7 +2000,8 @@ def q283_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q284_incremental_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
+
+    from hive_feature_demo_spark.streaming.ops import run_foreach_batch
 
     emb = table(spark, sf_dir, "embeddings")
     replay_dir = scratch_dir(prefix="q284_replay_")
@@ -2049,16 +2050,7 @@ def q284_incremental_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(state_dir)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = stream.writeStream.foreachBatch(write_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_foreach_batch(stream, write_batch)
 
     st = spark.read.parquet(state_dir)
     n_batches = st.select("batch_id").distinct().count()

@@ -255,7 +255,7 @@ def q48_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
     events = sops.with_flush_sentinel(
-        spark, sf_dir, sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
+        sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     )
     agg = (
         events.withWatermark("ts", "30 minutes")
@@ -275,7 +275,7 @@ def q48_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     sops.run_to_memory(agg, name, output_mode="append")
     return (
         spark.table(name)
-        .filter(F.col("event_type") != "flush")
+        .filter(~F.col("event_type").eqNullSafe("flush"))
         .orderBy("window_start", "event_type")
     )
 
@@ -454,7 +454,7 @@ def q96_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
     events = sops.with_flush_sentinel(
-        spark, sf_dir, sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
+        sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     )
     agg = (
         events.withWatermark("ts", "30 minutes")
@@ -470,7 +470,7 @@ def q96_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     sops.run_to_memory(agg, name, output_mode="append")
     return (
         spark.table(name)
-        .filter(F.col("event_type") != "flush")
+        .filter(~F.col("event_type").eqNullSafe("flush"))
         .orderBy("window_start", "event_type")
     )
 
@@ -512,7 +512,7 @@ def q108_streaming_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
     events = sops.with_flush_sentinel(
-        spark, sf_dir, sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
+        sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     )
     dim = _table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
@@ -678,12 +678,10 @@ def q158_stream_stream_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # emitted exactly once when the watermark closes it, and its state is then
 # evicted. (Complete mode would re-emit every session each trigger: O(all
 # sessions ever) per micro-batch, a scale-killer at 100 TB.) To keep the
-# FULL oracle (all sessions, including those still open at end-of-input), a
-# far-future flush row from a sentinel user advances the watermark past
-# every real session's end before the replay finishes — the finite-replay
-# analogue of a stream that keeps flowing; the sentinel is filtered out
-# after the watermark operator, so it advances event time without joining
-# any session. The oracle rebuilds sessions as gaps-and-islands with the
+# FULL oracle (all sessions, including those still open at end-of-input),
+# the flush sentinel (streaming.ops.with_flush_sentinel) advances the
+# watermark past every real session's end; it is filtered out after the
+# run. The oracle rebuilds sessions as gaps-and-islands with the
 # >= boundary Spark's exclusive window end implies (an event exactly `gap`
 # after its predecessor starts a NEW session; verified no such tie exists
 # at any shipped SF, so the chosen strictness is still
@@ -723,24 +721,15 @@ def q158_stream_stream_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q131_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    # one driver-side scalar (parquet footer stats make this a metadata
-    # read): where to place the watermark-advancing flush row — built
-    # engine-side in epoch-micros (host-TZ-proof; see _sentinel_stream)
-    flush_stream = sops._sentinel_stream(
-        spark, sf_dir, scratch_dir(prefix="q131_flush_")
+    events = sops.with_flush_sentinel(
+        sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     )
-    # NOTE: no pre-aggregation filter on the sentinel — Catalyst pushes a
-    # deterministic predicate BELOW the EventTimeWatermark node, which
-    # removes the flush row before it registers in the watermark stats and
-    # silently withholds the final sessions (observed: exactly the session
-    # containing max(ts) went missing). The sentinel instead flows through
-    # the aggregation: its own session can never close (watermark stops at
-    # flush - delay < flush + gap), so append-mode never emits it; the
-    # batch-side filter below is belt-and-braces.
+    # NOTE: no pre-aggregation filter on the sentinel (see
+    # with_flush_sentinel; observed: exactly the session containing max(ts)
+    # went missing). Its own session can never close (watermark stops at
+    # flush - delay < flush + gap); the batch-side filter is belt-and-braces.
     agg = (
-        events.unionByName(flush_stream)
-        .withWatermark("ts", "30 minutes")
+        events.withWatermark("ts", "30 minutes")
         .groupBy(F.session_window("ts", f"{_GAP_MIN} minutes").alias("sw"), "user_id")
         .agg(F.count("*").alias("n_events"), exact_sum("value", "session_value"))
         .select(
@@ -1123,17 +1112,14 @@ def q245_streaming_dynamic_gap_sessions(
 ) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
-    events = sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    # engine-side epoch-micros sentinel (host-TZ-proof; see _sentinel_stream)
-    flush_stream = sops._sentinel_stream(
-        spark, sf_dir, scratch_dir(prefix="q245_flush_")
+    events = sops.with_flush_sentinel(
+        sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     )
     gap = F.when(
         F.col("event_type").isin(*_LONG_GAP_TYPES), F.lit("60 minutes")
     ).otherwise(F.lit("30 minutes"))
     agg = (
-        events.unionByName(flush_stream)
-        .withWatermark("ts", "30 minutes")
+        events.withWatermark("ts", "30 minutes")
         .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
         .agg(F.count("*").alias("n_events"), exact_sum("value", "session_value"))
         .select(

@@ -139,6 +139,8 @@ def q191_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="streaming",
 )
 def q192_streaming_update_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from hive_feature_demo_spark.streaming import ops as sops
+
     e = table(spark, sf_dir, "events")
     replay_dir = scratch_dir(prefix="q192_replay_")
     out_dir = os.path.join(scratch_dir(prefix="q192_out_"), "updates")
@@ -149,12 +151,7 @@ def q192_streaming_update_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         quartiled.filter(F.col("quartile") == i).drop("quartile").coalesce(
             1
         ).write.mode("append").parquet(replay_dir)
-    probed = spark.read.parquet(replay_dir).schema
-    stream = (
-        spark.readStream.schema(probed)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
+    stream = sops.events_stream(spark, replay_dir, max_files_per_trigger=1)
     agg = stream.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         F.sum(F.col("value").cast("decimal(25,10)")).alias("value_sum_dec"),
@@ -165,20 +162,7 @@ def q192_streaming_update_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(out_dir)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    sops.run_foreach_batch(agg, write_batch, output_mode="update")
 
     hist = spark.read.parquet(out_dir)
     w = Window.partitionBy("event_type").orderBy(F.desc("batch_id"))
@@ -323,7 +307,7 @@ def q193_chained_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
     events = sops.with_flush_sentinel(
-        spark, sf_dir, sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
+        sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     )
     sub = (
         events.withWatermark("ts", "30 minutes")
@@ -346,7 +330,7 @@ def q193_chained_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sops.run_to_memory(rolled, name, output_mode="append")
     return (
         spark.table(name)
-        .filter(F.col("event_type") != "flush")
+        .filter(~F.col("event_type").eqNullSafe("flush"))
         .orderBy("hour_start", "event_type")
     )
 
@@ -378,7 +362,7 @@ def q194_streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame
     from hive_feature_demo_spark.streaming import ops as sops
 
     events = sops.with_flush_sentinel(
-        spark, sf_dir, sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
+        sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     )
     deduped = (
         events.withWatermark("ts", "30 minutes")
@@ -452,7 +436,7 @@ def q212_stream_static_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).agg(F.count("*").alias(out_col))
 
     path = os.path.join(sf_dir, "events.parquet")
-    events = sops.with_flush_sentinel(spark, sf_dir, sops.events_stream(spark, path))
+    events = sops.with_flush_sentinel(sops.events_stream(spark, path))
     member = _windowed(
         events.withWatermark("ts", "30 minutes").join(
             F.broadcast(optin), F.col("user_id") == optin.c_custkey, "left_semi"
@@ -460,7 +444,7 @@ def q212_stream_static_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
     )
     other = _windowed(
-        sops.with_flush_sentinel(spark, sf_dir, sops.events_stream(spark, path))
+        sops.with_flush_sentinel(sops.events_stream(spark, path))
         .withWatermark("ts", "30 minutes")
         .join(F.broadcast(optin), F.col("user_id") == optin.c_custkey, "left_anti"),
         "n",
@@ -473,16 +457,17 @@ def q212_stream_static_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _rollup(name: str, out_col: str) -> DataFrame:
         return (
             spark.table(name)
-            .filter(F.col("event_type") != "flush")
+            .filter(~F.col("event_type").eqNullSafe("flush"))
             .groupBy("event_type")
             .agg(F.sum("n").alias(out_col))
         )
 
+    # null-safe full outer join: a NULL event_type is one group, not two
+    m, o = _rollup(m_name, "n_member_events"), _rollup(o_name, "n_other_events")
     return (
-        _rollup(m_name, "n_member_events")
-        .join(_rollup(o_name, "n_other_events"), "event_type", "full_outer")
+        m.join(o, m.event_type.eqNullSafe(o.event_type), "full_outer")
         .select(
-            "event_type",
+            F.coalesce(m.event_type, o.event_type).alias("event_type"),
             F.coalesce("n_member_events", F.lit(0)).alias("n_member_events"),
             F.coalesce("n_other_events", F.lit(0)).alias("n_other_events"),
         )
@@ -554,7 +539,7 @@ def q310_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
     events = sops.with_flush_sentinel(
-        spark, sf_dir, sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
+        sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     )
     ranked = with_hll_reg_rank(events, "user_id")
     level1 = (
@@ -669,24 +654,24 @@ _SCD2_ROT_SQL = (
 def q322_streaming_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.streaming import ops as sops
 
-    # version boundary as integer epoch-microseconds computed ENGINE-side:
-    # collecting min/max as TimestampType renders them in the Python
-    # process's LOCAL zone (datetime.fromtimestamp), so driver-side epoch
-    # arithmetic assumed UTC walls and shifted the boundary by the host
-    # offset (r10 TZ=Asia/Kolkata sweep: +5:30 → 5 segment totals off).
-    # Longs cross the py4j boundary unchanged.
-    t0_us, t1_us = (
+    # version boundary as integer epoch-micros, computed IN the plan (a
+    # one-row crossJoin into the dimension): no build-time job, and empty
+    # events give a NULL boundary instead of driver-side None arithmetic.
+    # Never collect it as TimestampType: collect() renders the host zone
+    # (r10 TZ=Asia/Kolkata sweep: +5:30 → 5 segment totals off).
+    bounds = (
         table(spark, sf_dir, "events")
         .agg(
-            F.min(epoch_micros(F.col("ts"))),
-            F.max(epoch_micros(F.col("ts"))),
+            F.min(epoch_micros(F.col("ts"))).alias("t0"),
+            F.max(epoch_micros(F.col("ts"))).alias("t1"),
         )
-        .first()
+        .selectExpr("(t0 + t1) div 2 AS mid_us")
     )
-    mid_us = (t0_us + t1_us) // 2
-
-    cust = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    rot = F.col("c_mktsegment")
+    cust = (
+        table(spark, sf_dir, "customer")
+        .select("c_custkey", "c_mktsegment")
+        .crossJoin(bounds)
+    )
     expr = None
     for a, b in _SCD2_ROT.items():
         c = F.when(F.col("c_mktsegment") == a, b)
@@ -695,18 +680,18 @@ def q322_streaming_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFram
         "c_custkey",
         F.col("c_mktsegment").alias("segment"),
         F.lit(-(2**62)).alias("valid_from_us"),
-        F.lit(mid_us).alias("valid_to_us"),
+        F.col("mid_us").alias("valid_to_us"),
     )
     v2 = cust.select(
         "c_custkey",
         expr.alias("segment"),
-        F.lit(mid_us).alias("valid_from_us"),
+        F.col("mid_us").alias("valid_from_us"),
         F.lit(2**62).alias("valid_to_us"),
     )
     scd = v1.unionByName(v2)
 
     events = sops.with_flush_sentinel(
-        spark, sf_dir, sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
+        sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     )
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     enriched = (

@@ -13,6 +13,8 @@ state finite; stream-static joins re-broadcast the dimension per micro-batch.
 
 from __future__ import annotations
 
+import datetime as dt
+import json
 import os
 
 import pandas as pd
@@ -118,25 +120,38 @@ def enrich_with_dimension(events: DataFrame, dim: DataFrame, on, how: str = "inn
     return events.join(F.broadcast(dim), on, how)
 
 
-def with_flush_sentinel(
-    spark: SparkSession, sf_dir: str, events_stream: DataFrame
-) -> DataFrame:
+#: Event time of the flush sentinel. Every representable timestamp except
+#: the last day comes before it, so its watermark closes every real window
+#: without first asking the data for its ``max(ts)``.
+FLUSH_TS = dt.datetime(9999, 12, 30, tzinfo=dt.timezone.utc)
+
+#: The normalized events schema (what :func:`events_stream` emits) that the
+#: sentinel file is declared with, so reading it back infers nothing.
+_SENTINEL_SCHEMA = T.StructType(
+    [T.StructField(f.name, T.TimestampType()) if f.name == "ts" else f for f in EVENTS_RAW_SCHEMA]
+)
+
+
+def with_flush_sentinel(events: DataFrame) -> DataFrame:
     """Union a far-future sentinel row so append-mode windows all close.
 
     Append-mode windowed aggregation only emits a window once the watermark
     passes its end — on a finite replay the trailing windows would stay
     buffered forever. This sentinel (user_id=-1, event_type='flush',
-    ts = max(ts) + 1 day) is the finite-replay analogue of a stream that
+    ts = ``FLUSH_TS``) is the finite-replay analogue of a stream that
     keeps flowing: it advances the watermark past every real window's end;
     its OWN windows can never close (watermark stalls at flush - delay),
     so append mode never emits it. Do NOT filter the sentinel before the
     watermark operator — Catalyst pushes deterministic predicates below
     EventTimeWatermark and the flush row would vanish before registering
     in the watermark stats (observed: the final real window went missing).
-    Filter ``event_type != 'flush'`` / ``user_id >= 0`` on the BATCH side
-    after the run instead, as belt-and-braces.
+    Filter ``event_type <=> 'flush'`` (null-safe: NULL types stay) or
+    ``user_id >= 0`` out on the BATCH side after the run instead, as
+    belt-and-braces. The row is constant, so building it runs no Spark
+    job: pyarrow writes it to a scratch file (PySpark has no bounded
+    in-memory stream source), read back under a declared schema.
 
-    CONSTRAINT (r5-verdict advice): the unioned ``events_stream`` must
+    CONSTRAINT (r5-verdict advice): the unioned ``events`` stream must
     deliver all its data no later than the micro-batch that consumes the
     sentinel — i.e. do NOT throttle it with ``maxFilesPerTrigger``/rate
     limits. The sentinel is a separate single-file source; if the events
@@ -146,44 +161,19 @@ def with_flush_sentinel(
     caller reads events as one unthrottled single-file source, which
     satisfies the constraint by construction.
     """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from ..scratch import scratch_dir
 
-    return events_stream.unionByName(_sentinel_stream(spark, sf_dir, scratch_dir(prefix="flush_")))
-
-
-def _sentinel_stream(spark: SparkSession, sf_dir: str, flush_dir: str) -> DataFrame:
-    """Single-row far-future sentinel source (see with_flush_sentinel).
-
-    The sentinel timestamp is computed and materialized entirely
-    engine-side in integer epoch-microseconds: collecting max(ts) as a
-    TimestampType and re-ingesting the Python datetime round-trips through
-    the HOST zone (fromtimestamp ∘ mktime — identity except in a
-    DST-repeated hour), whereas longs cross py4j unchanged and
-    ``timestamp_micros`` is zone-free (r10 host-TZ hardening)."""
-    from ..catalog import table
-    from ..functions.temporal import epoch_micros
-
-    max_us = (
-        table(spark, sf_dir, "events")
-        .agg(F.max(epoch_micros(F.col("ts"))))
-        .first()[0]
+    flush_dir = scratch_dir(prefix="flush_")
+    row = pa.table(
+        {"event_id": [-1], "ts": [FLUSH_TS], "user_id": [-1],
+         "event_type": ["flush"], "value": [0.0], "props": ["{}"]}
     )
-    flush_us = max_us + 86_400_000_000  # + 1 day
-    spark.createDataFrame(
-        [(-1, flush_us, -1, "flush", 0.0, "{}")],
-        schema="event_id bigint, ts_us bigint, user_id bigint, "
-        "event_type string, value double, props string",
-    ).select(
-        "event_id",
-        F.timestamp_micros("ts_us").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    ).coalesce(1).write.mode("overwrite").parquet(flush_dir)
-    return spark.readStream.schema(
-        spark.read.parquet(flush_dir).schema
-    ).parquet(flush_dir)
+    pq.write_table(row, os.path.join(flush_dir, "flush.parquet"))
+    sentinel = events.sparkSession.readStream.schema(_SENTINEL_SCHEMA).parquet(flush_dir)
+    return events.unionByName(sentinel)
 
 
 def run_to_memory(
@@ -191,7 +181,6 @@ def run_to_memory(
     name: str,
     output_mode: str = "append",
     shuffle_partitions: int | None = 8,
-    available_now: bool = False,
     once: bool = False,
 ) -> None:
     """Drive a streaming DataFrame to completion into an in-memory table.
@@ -205,14 +194,11 @@ def run_to_memory(
     pure per-micro-batch scheduling overhead at test scale). Production
     sizes this to the cluster; results never depend on it.
 
-    ``available_now`` uses ``Trigger.AvailableNow`` (self-terminating batch
-    replay) instead of ``processAllAvailable``+stop. Measured equal at
-    sf0.1 (PERF.md); NOT the default because the continuous-trigger path
-    runs a final no-data micro-batch that advances the watermark — which
-    watermark-eviction outputs (leftOuter join releases, append-mode final
-    windows) rely on for end-of-input flushing. (AvailableNow ALSO runs
-    that final batch — measured r13, 2 batches either way — hence the
-    wash.)
+    The default drain is ``processAllAvailable``+stop, whose final no-data
+    micro-batch advances the watermark — which watermark-eviction outputs
+    (leftOuter join releases, append-mode final windows) rely on for
+    end-of-input flushing. (``Trigger.AvailableNow`` measured equal at
+    sf0.1, PERF.md, so it is not offered.)
 
     ``once`` uses the legacy one-shot trigger, which processes ALL
     available input in a SINGLE micro-batch and terminates WITHOUT the
@@ -228,41 +214,50 @@ def run_to_memory(
     which was the no-data batch's addBatch + state commit (r13,
     scripts/profile_streaming.py).
     """
-    if once and available_now:
-        raise ValueError("once and available_now are mutually exclusive")
+    _run(stream_df, lambda w: w.format("memory").queryName(name),
+         output_mode, shuffle_partitions, once, name)
+
+
+def run_foreach_batch(
+    stream_df: DataFrame, fn, output_mode: str = "append", shuffle_partitions: int | None = 8
+) -> None:
+    """Drive a streaming DataFrame to completion through ``foreachBatch``:
+    ``fn(batch_df, batch_id)`` runs once per micro-batch, with the loop and
+    ``shuffle_partitions`` pin of :func:`run_to_memory`."""
+    _run(stream_df, lambda w: w.foreachBatch(fn), output_mode, shuffle_partitions)
+
+
+def _run(stream_df, sink, output_mode, shuffle_partitions, once=False, name=None) -> None:
+    """The one start / drain / stop loop: pin ``shuffle.partitions``, start
+    ``sink(writer)``, drain, record progress under ``name`` (the query id
+    when None), stop, restore the partition count."""
     spark = stream_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     if shuffle_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
-        writer = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif once:
+        writer = sink(stream_df.writeStream.outputMode(output_mode))
+        if once:
             writer = writer.trigger(once=True)
         q = writer.start()
         try:
-            if available_now or once:
+            if once:
                 q.awaitTermination()
             else:
                 q.processAllAvailable()
-            _record_progress(name, q)
+            _record_progress(name or str(q.id), q)
         finally:
             q.stop()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-#: Per-run StreamingQueryProgress history, keyed by memory-sink name —
-#: populated by every run_to_memory call so tests can assert state-store
-#: invariants (e.g. numRowsTotal stays bounded across the replay) against
-#: the REAL registered streaming queries, not a parallel harness. Each
-#: value is a list of plain progress dicts (one per micro-batch, up to
-#: spark.sql.streaming.numRecentProgressUpdates).
+#: Per-run StreamingQueryProgress history, keyed by memory-sink name (the
+#: query id for foreachBatch runs) — populated by every run so tests can
+#: assert state-store invariants (e.g. numRowsTotal stays bounded across
+#: the replay) against the REAL registered streaming queries, not a
+#: parallel harness. Each value is a list of plain progress dicts (one
+#: per micro-batch, up to spark.sql.streaming.numRecentProgressUpdates).
 LAST_PROGRESS: dict[str, list[dict]] = {}
 
 #: Retention bound for LAST_PROGRESS (r5-verdict advice: without
@@ -274,15 +269,10 @@ MAX_PROGRESS_RUNS = 256
 
 
 def _record_progress(name: str, q) -> None:
-    import json
-
-    out: list[dict] = []
-    for p in q.recentProgress:
-        if isinstance(p, dict):
-            out.append(p)
-        else:  # StreamingQueryProgress object (PySpark >= 3.4)
-            out.append(json.loads(p.json))
-    LAST_PROGRESS[name] = out
+    # PySpark >= 3.4 hands StreamingQueryProgress objects, older dicts
+    LAST_PROGRESS[name] = [
+        p if isinstance(p, dict) else json.loads(p.json) for p in q.recentProgress
+    ]
     while len(LAST_PROGRESS) > MAX_PROGRESS_RUNS:
         # dicts preserve insertion order: evict the oldest run
         LAST_PROGRESS.pop(next(iter(LAST_PROGRESS)))
@@ -290,46 +280,31 @@ def _record_progress(name: str, q) -> None:
 
 def state_rows_history(name_prefix: str) -> list[list[int]]:
     """Per-micro-batch state-store row totals for runs whose sink name
-    starts with ``name_prefix`` (registered queries suffix a run sequence).
-
-    Returns one list per matching run: ``sum(numRowsTotal over state
-    operators)`` for each micro-batch that reported state. Empty inner
-    lists mean the run was stateless.
+    starts with ``name_prefix`` (registered queries suffix a run sequence):
+    :func:`state_rows_by_operator` summed over each batch's state
+    operators. Empty inner lists mean the run was stateless.
     """
-    hist = []
-    for name, progresses in LAST_PROGRESS.items():
-        if not name.startswith(name_prefix):
-            continue
-        rows = []
-        for p in progresses:
-            ops_ = p.get("stateOperators") or []
-            if ops_:
-                rows.append(sum(int(o.get("numRowsTotal", 0)) for o in ops_))
-        hist.append(rows)
-    return hist
+    return [[sum(b) for b in run] for run in state_rows_by_operator(name_prefix)]
 
 
 def state_rows_by_operator(name_prefix: str) -> list[list[list[int]]]:
-    """Per-micro-batch, PER-STATE-OPERATOR row totals for matching runs.
-
-    Like :func:`state_rows_history` but without summing across state
-    operators — needed to bound each level of a CHAINED stateful query
-    separately (e.g. q310's level-1 (window, register) cells vs its
-    level-2 hour windows). Returns one entry per matching run; each entry
-    is a list of per-batch ``[numRowsTotal per operator]`` lists, in the
-    plan's stateOperators order (stable within a run).
+    """Per-micro-batch, PER-STATE-OPERATOR row totals for matching runs —
+    needed to bound each level of a CHAINED stateful query separately
+    (e.g. q310's level-1 (window, register) cells vs its level-2 hour
+    windows). Returns one entry per matching run; each entry is a list of
+    ``[numRowsTotal per operator]`` lists, one per micro-batch that
+    reported state, in the plan's stateOperators order (stable within a
+    run).
     """
-    hist = []
-    for name, progresses in LAST_PROGRESS.items():
-        if not name.startswith(name_prefix):
-            continue
-        rows = []
-        for p in progresses:
-            ops_ = p.get("stateOperators") or []
-            if ops_:
-                rows.append([int(o.get("numRowsTotal", 0)) for o in ops_])
-        hist.append(rows)
-    return hist
+    return [
+        [
+            [int(o.get("numRowsTotal", 0)) for o in p["stateOperators"]]
+            for p in progresses
+            if p.get("stateOperators")
+        ]
+        for name, progresses in LAST_PROGRESS.items()
+        if name.startswith(name_prefix)
+    ]
 
 
 def click_purchase_join(
@@ -412,7 +387,7 @@ def click_purchase_join(
     )
 
 
-RUNNING_TOTALS_SCHEMA = T.StructType(
+TOTALS_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
         T.StructField("n_events", T.LongType()),
@@ -469,7 +444,7 @@ def running_user_totals(events: DataFrame, quantize_digits: int | None = None) -
         events.groupBy("user_id")
         .applyInPandasWithState(
             update,
-            outputStructType=RUNNING_TOTALS_SCHEMA,
+            outputStructType=TOTALS_SCHEMA,
             stateStructType=_RUNNING_STATE_SCHEMA,
             outputMode="update",
             timeoutConf="NoTimeout",
@@ -477,12 +452,7 @@ def running_user_totals(events: DataFrame, quantize_digits: int | None = None) -
     )
 
 
-def run_foreach_batch_parquet(
-    stream_df: DataFrame,
-    out_dir: str,
-    ledger_dir: str,
-    shuffle_partitions: int | None = 8,
-) -> None:
+def run_foreach_batch_parquet(stream_df: DataFrame, out_dir: str, ledger_dir: str) -> None:
     """Exactly-once-ish parquet sink via ``foreachBatch`` + a batch ledger.
 
     ``foreachBatch`` hands (batch_df, batch_id); on restart after a failure
@@ -492,8 +462,6 @@ def run_foreach_batch_parquet(
     transactional tables; with Delta/Iceberg the txn log replaces the
     ledger.
     """
-    import os
-
     os.makedirs(ledger_dir, exist_ok=True)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -504,18 +472,7 @@ def run_foreach_batch_parquet(
         with open(marker, "w") as fh:
             fh.write("ok")
 
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = stream_df.writeStream.foreachBatch(write_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_foreach_batch(stream_df, write_batch)
 
 
 SESSIONS_SCHEMA = T.StructType(
@@ -614,15 +571,6 @@ def stateful_sessions(
             timeoutConf="EventTimeTimeout",
         )
     )
-
-
-TOTALS_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-    ]
-)
 
 
 def make_running_totals_processor():

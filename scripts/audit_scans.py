@@ -17,8 +17,8 @@ from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from hive_feature_demo_spark.catalog import TESTDATA_TABLES  # noqa: E402
 from hive_feature_demo_spark.plans import REGISTRY  # noqa: E402
+from hive_feature_demo_spark.plans.segment import FANS_PARQUET  # noqa: E402
 from hive_feature_demo_spark.session import get_spark  # noqa: E402
 
 # formatted-plan node headers: "(N) NodeName". The details section lists one
@@ -61,20 +61,31 @@ def _top_level_fields(schema: str) -> int:
     return n_commas + 1 if has_content else 0
 
 
+def table_widths(sf_dir: str) -> dict[str, int]:
+    """Top-level column count of every ``<table>.parquet`` in ``sf_dir``
+    plus ``fans`` (data/fans.parquet), read from the parquet footers."""
+    import pyarrow.parquet as pq
+
+    paths = {f[: -len(".parquet")]: os.path.join(sf_dir, f)
+             for f in os.listdir(sf_dir) if f.endswith(".parquet")}
+    paths["fans"] = FANS_PARQUET
+    return {t: len(pq.read_schema(p).names) for t, p in sorted(paths.items())}
+
+
 def full_width_scans(
     plan: str, widths: dict[str, int], min_width: int
 ) -> list[tuple[str, int, int, str]]:
     """(table, read_cols, table_cols, pushed) for each scan of a
     ``min_width``-plus-column table that reads EVERY column.
 
-    A scan whose Location names no testdata table (a scratch round trip,
-    data/fans.parquet) is skipped; one that names several tables raises,
-    since no single width applies to it."""
+    A scan whose Location names no table in ``widths`` (a scratch round
+    trip) is skipped; one that names several tables raises, since no
+    single width applies to it."""
     out = []
     for chunk in _scan_chunks(plan):
         loc = re.search(r"^Location: .*$", chunk, re.M)
         tables = set(_LOC_TABLE_RE.findall(loc.group(0) + ",")) if loc else set()
-        if not tables & set(TESTDATA_TABLES):
+        if not tables & set(widths):
             continue
         if len(tables) > 1:
             raise ValueError(f"scan Location names several tables: {sorted(tables)}")
@@ -101,12 +112,7 @@ def main() -> int:
         min_width = int(argv[argv.index("--min-width") + 1])
 
     spark = get_spark(app_name="audit-scans")
-    # on-disk widths
-    widths: dict[str, int] = {}
-    for f in sorted(os.listdir(sf_dir)):
-        if f.endswith(".parquet"):
-            t = f[: -len(".parquet")]
-            widths[t] = len(spark.read.parquet(os.path.join(sf_dir, f)).columns)
+    widths = table_widths(sf_dir)
     print(f"table widths: {widths}")
 
     full_width = Counter()

@@ -96,14 +96,14 @@ def test_registry_plan_audit_within_allowlist(registry_sweep):
     assert not nested_bad, f"nested same-key Exchange: {nested_bad}"
 
 
-def test_registry_scan_pruning_within_allowlist(spark, registry_sweep):
+def test_registry_scan_pruning_within_allowlist(registry_sweep):
     """Column pruning must reach every parquet scan (guide §6): no query
     may scan EVERY column of a >=5-column table unless it semantically
     uses every column (documented allowlist). The fact table (lineitem,
     11 cols) has a zero-tolerance gate — at 100 TB a full-width fact scan
     multiplies scan bytes ~2-4x. Census at r12 HEAD: 319 plans, exactly
     the two allowlisted full-width scans (scripts/audit_scans.py)."""
-    from audit_scans import full_width_scans
+    from audit_scans import full_width_scans, table_widths
 
     FULL_WIDTH_ALLOWED = {
         # q12 applies a scalar function to every one of part's 6 columns
@@ -111,11 +111,7 @@ def test_registry_scan_pruning_within_allowlist(spark, registry_sweep):
         # q140 pseudonymizes/bands/aggregates all 5 customer columns
         ("q140_pii_anonymization", "customer"),
     }
-    widths = {}
-    for f in sorted(os.listdir(SF_DIR)):
-        if f.endswith(".parquet"):
-            t = f[: -len(".parquet")]
-            widths[t] = len(spark.read.parquet(os.path.join(SF_DIR, f)).columns)
+    widths = table_widths(SF_DIR)
     bad = []
     for name in sorted(REGISTRY):
         rec = registry_sweep[name]
@@ -150,3 +146,18 @@ def test_registry_expand_within_allowlist(spark, registry_sweep):
     mode = spark._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     kinds = [e["kind"] for e in _audit_plan(plan.queryExecution().explainString(mode))["expand"]]
     assert kinds == ["count_distinct"], kinds
+
+
+def test_scan_gate_checks_fans_table():
+    """The scan gate's widths include data/fans.parquet, and a full-width
+    scan of any table in ``widths`` is flagged; a scratch round trip (no
+    table in its Location) is still skipped."""
+    from audit_scans import full_width_scans, table_widths
+
+    assert table_widths(SF_DIR)["fans"] == 14
+    plan = "(1) Scan parquet \nLocation: InMemoryFileIndex [file:{}]\nReadSchema: struct<{}>\n"
+    full, widths = "id:string,city:string,state:string", {"fans": 3}
+    flagged = [("fans", 3, 3, "[]")]
+    assert full_width_scans(plan.format("/repo/data/fans.parquet", full), widths, 3) == flagged
+    assert full_width_scans(plan.format("/repo/data/fans.parquet", "id:string"), widths, 3) == []
+    assert full_width_scans(plan.format("/tmp/q192_replay_x", full), widths, 3) == []

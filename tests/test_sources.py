@@ -169,11 +169,6 @@ def test_fan_out_scan_gates_on_parallelism(spark):
     # already-wide input: no-op, the repartition shuffle is NOT added
     wide = spark.range(0, 1000, 1, target).select(F.col("id").alias("k"))
     assert fan_out_scan(wide, "k") is wide
-    # assume_splits skips the df.rdd planning probe entirely and drives
-    # the gate from the caller's knowledge (r6 ADVICE item 4)
-    assert fan_out_scan(wide, "k", assume_splits=target) is wide
-    fanned2 = fan_out_scan(narrow, "k", assume_splits=1)
-    assert fanned2.rdd.getNumPartitions() == target
 
 
 def test_write_compacted_sizes_file_count(spark, sf_dir, tmp_path):

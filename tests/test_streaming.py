@@ -618,3 +618,83 @@ def test_q322_scd2_state_bounded(spark, sf_dir):
     assert max(rows) <= 5 * (n_hw + 1), (n_hw, rows)
     assert max(rows) < n_events, "state scaled with events, not windows"
     assert rows[-1] <= 1, f"state not evicted at end of replay: {rows}"
+
+
+# ---------------------------------------------------------------------------
+# The flush sentinel: job-free, safe on empty input, NULL-safe filters.
+# ---------------------------------------------------------------------------
+
+
+def test_flush_sentinel_starts_no_job(spark, sf_dir):
+    """Building the sentinel-unioned stream starts no Spark job beyond the
+    events stream's own footer probe: the sentinel is a constant row."""
+    import uuid
+
+    path = os.path.join(sf_dir, "events.parquet")
+    sc = spark.sparkContext
+
+    def jobs(build) -> int:
+        sc.setJobGroup(group := f"probe-{uuid.uuid4()}", "job count")
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker lags the bus
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    probe = jobs(lambda: ops.events_stream(spark, path))
+    assert probe >= 1  # the counter does see the probe's job
+    assert jobs(lambda: ops.with_flush_sentinel(ops.events_stream(spark, path))) == probe
+
+
+def _oracle_problems(spark, sf_dir, tmp_path, events, names=None) -> dict:
+    """Oracle mismatches of ``names`` (default: every flush-sentinel query)
+    on a copy of ``sf_dir`` whose events table is the pyarrow ``events``."""
+    import inspect
+
+    import pyarrow.parquet as pq
+
+    from hive_feature_demo_spark.plans import REGISTRY
+    from tests.oracle import compare, duckdb_con
+
+    if names is None:  # every query that closes its windows with the sentinel
+        names = [n for n, q in REGISTRY.items() if "with_flush_sentinel" in inspect.getsource(q.fn)]
+        assert len(names) == 10, names
+    sf = str(tmp_path / "variant")
+    os.makedirs(sf)
+    for f in set(os.listdir(sf_dir)) - {"events.parquet"}:
+        os.symlink(os.path.join(sf_dir, f), os.path.join(sf, f))
+    pq.write_table(events, os.path.join(sf, "events.parquet"))
+    con = duckdb_con(sf)
+    try:
+        out = {n: compare(REGISTRY[n].fn(spark, sf), con, REGISTRY[n].oracle) for n in names}
+    finally:
+        con.close()
+    return {n: p for n, p in out.items() if p}
+
+
+def test_sentinel_queries_match_oracle_on_empty_events(spark, sf_dir, tmp_path):
+    """On a zero-row events table all ten sentinel queries run and match the
+    oracle: neither the sentinel nor q322's version boundary needs max(ts)."""
+    import pyarrow.parquet as pq
+
+    empty = pq.read_table(os.path.join(sf_dir, "events.parquet")).slice(0, 0)
+    assert _oracle_problems(spark, sf_dir, tmp_path, empty) == {}
+
+
+def test_flush_filters_keep_null_event_types(spark, sf_dir, tmp_path):
+    """With 1 in 20 event types NULL, the batch-side flush filters (and
+    q212's rollup join) keep the NULL group, as one group: a plain
+    ``event_type != 'flush'`` is NULL, not true, on those rows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    col = events.schema.get_field_index("event_type")
+    mask = pa.array([i % 20 == 0 for i in range(events.num_rows)])
+    nulled = pc.if_else(mask, pa.scalar(None, pa.string()), events.column(col))
+    names = ["q48_streaming_tumbling", "q96_streaming_sliding",
+             "q193_chained_window_rollup", "q212_stream_static_semi_anti"]
+    variant = events.set_column(col, "event_type", nulled)
+    assert _oracle_problems(spark, sf_dir, tmp_path, variant, names) == {}
