@@ -657,8 +657,12 @@ def q322_streaming_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFram
     # version boundary as integer epoch-micros, computed IN the plan (a
     # one-row crossJoin into the dimension): no build-time job, and empty
     # events give a NULL boundary instead of driver-side None arithmetic.
-    # Never collect it as TimestampType: collect() renders the host zone
-    # (r10 TZ=Asia/Kolkata sweep: +5:30 → 5 segment totals off).
+    # Cached, because the stream-static join re-evaluates the dimension on
+    # every micro-batch: the first batch fills the cache, later batches
+    # neither rescan events nor see the boundary move as the table grows.
+    # Released once the run is drained. Never collect it as TimestampType:
+    # collect() renders the host zone (r10 TZ=Asia/Kolkata sweep: +5:30 →
+    # 5 segment totals off).
     bounds = (
         table(spark, sf_dir, "events")
         .agg(
@@ -666,6 +670,7 @@ def q322_streaming_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFram
             F.max(epoch_micros(F.col("ts"))).alias("t1"),
         )
         .selectExpr("(t0 + t1) div 2 AS mid_us")
+        .cache()
     )
     cust = (
         table(spark, sf_dir, "customer")
@@ -707,7 +712,10 @@ def q322_streaming_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFram
         F.window("ts", "1 hour").alias("w"), "segment"
     ).agg(F.count("*").alias("n"), F.sum(cents).alias("cents"))
     name = f"q322_out_{next(_STREAM_RUN_SEQ)}"
-    sops.run_to_memory(partials, name, output_mode="append")
+    try:
+        sops.run_to_memory(partials, name, output_mode="append")
+    finally:
+        bounds.unpersist()
     return (
         spark.table(name)
         .groupBy("segment")

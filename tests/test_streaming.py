@@ -620,6 +620,33 @@ def test_q322_scd2_state_bounded(spark, sf_dir):
     assert rows[-1] <= 1, f"state not evicted at end of replay: {rows}"
 
 
+def test_q322_reads_its_version_boundary_once(spark, sf_dir, monkeypatch):
+    """q322's stream-static join re-evaluates the SCD dimension on every
+    micro-batch. Its version boundary (a min/max over all of events) must
+    come from the cache, which the first batch fills, so a replay scans
+    events for it once, not once per batch; and the cache is released
+    when the run ends."""
+    from hive_feature_demo_spark.plans.streaming_more import (
+        q322_streaming_scd2_enrichment,
+    )
+
+    seen = []
+    record = ops._record_progress
+
+    def spy(name, q):
+        plan = q._jsq.explainInternal(False)  # the last batch's physical plan
+        seen.append((len(q.recentProgress), plan))
+        record(name, q)
+
+    monkeypatch.setattr(ops, "_record_progress", spy)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    q322_streaming_scd2_enrichment(spark, sf_dir).collect()
+    ((n_batches, last_plan),) = seen
+    assert n_batches >= 2, "the replay never re-evaluated the dimension"
+    assert "InMemoryTableScan" in last_plan, last_plan
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
 # ---------------------------------------------------------------------------
 # The flush sentinel: job-free, safe on empty input, NULL-safe filters.
 # ---------------------------------------------------------------------------
