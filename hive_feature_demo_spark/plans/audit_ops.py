@@ -1958,6 +1958,12 @@ def q283_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+#: q284's per-batch partials as foreachBatch writes them.
+_GRAM_PARTIALS = (
+    "i int, j int, sxy decimal(35,10), cnt bigint, sx decimal(35,10), nx bigint, batch_id int"
+)
+
+
 @register(
     "q284_incremental_gram",
     oracle=f"""
@@ -2018,9 +2024,12 @@ def q284_incremental_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mode("overwrite")
         .parquet(replay_dir)
     )
+    # Read under the table's own schema, which is what inference on the
+    # glob gives (its roots are the r= dirs, so no r column): no inference
+    # job, and an empty table, whose write makes no r= dir, still reads.
     replay_glob = replay_dir + "/r=*"
     stream = (
-        spark.readStream.schema(spark.read.parquet(replay_glob).schema)
+        spark.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(replay_glob)
     )
@@ -2052,7 +2061,9 @@ def q284_incremental_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     run_foreach_batch(stream, write_batch)
 
-    st = spark.read.parquet(state_dir)
+    # an empty table replays zero micro-batches, which write no partials
+    os.makedirs(state_dir, exist_ok=True)
+    st = spark.read.schema(_GRAM_PARTIALS).parquet(state_dir)
     n_batches = st.select("batch_id").distinct().count()
     # merge partials: decimal addition is associative -> equals one-pass
     merged = st.groupBy("i", "j").agg(

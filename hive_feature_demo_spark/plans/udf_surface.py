@@ -210,15 +210,19 @@ def q171_applyinarrow_groupstats(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pyarrow as pa
 
-        values = np.asarray(tbl.column("value"), dtype=np.float64)
+        # NULLs drop out as in SQL SUM and COUNT(DISTINCT); through NumPy a
+        # NULL value would turn NaN and then -2^63 cents
+        values = np.asarray(tbl.column("value").drop_null(), dtype=np.float64)
         cents = np.floor(values * 100.0 + 0.5).astype(np.int64).sum()
-        users = len(set(tbl.column("user_id").to_pylist()))
+        users = len(set(tbl.column("user_id").drop_null().to_pylist()))
         return pa.Table.from_pydict(
             {
                 "event_type": pa.array([key[0]], type=pa.string()),
                 "n_events": pa.array([tbl.num_rows], type=pa.int64()),
                 "n_users": pa.array([users], type=pa.int64()),
-                "total_value": pa.array([int(cents) / 100.0], type=pa.float64()),
+                "total_value": pa.array(
+                    [int(cents) / 100.0 if len(values) else None], type=pa.float64()
+                ),
             }
         )
 

@@ -24,6 +24,26 @@ def sf_dir() -> str:
 
 
 @pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn) -> (fn(), n)``: ``n`` is the number of Spark jobs
+    ``fn`` started on the calling thread (its own statusTracker job group)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        sc.setJobGroup(group := f"probe-{uuid.uuid4()}", "job count")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker lags the bus
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture(scope="session")
 def registry_sweep(spark, sf_dir):
     """ONE pass over the full registry shared by every registry-wide gate.
 

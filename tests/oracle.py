@@ -85,3 +85,25 @@ def compare_counts(
             + f"; sample={sample}; spark-only={extra_s}; duckdb-only={extra_d}"
         )
     return problems, len(s_rows), len(d_rows)
+
+
+def variant_problems(spark, sf_dir: str, variant_dir: str, tables: dict, names) -> dict:
+    """Oracle mismatches of the registry queries ``names`` on a copy of
+    ``sf_dir`` in which each ``tables`` entry (name -> pyarrow table)
+    replaces that table and the others are symlinked; only the queries
+    that mismatch are returned."""
+    import pyarrow.parquet as pq
+
+    from hive_feature_demo_spark.plans import REGISTRY
+
+    os.makedirs(variant_dir)
+    for f in set(os.listdir(sf_dir)) - {f"{t}.parquet" for t in tables}:
+        os.symlink(os.path.join(sf_dir, f), os.path.join(variant_dir, f))
+    for t, data in tables.items():
+        pq.write_table(data, os.path.join(variant_dir, f"{t}.parquet"))
+    con = duckdb_con(variant_dir)
+    try:
+        out = {n: compare(REGISTRY[n].fn(spark, variant_dir), con, REGISTRY[n].oracle) for n in names}
+    finally:
+        con.close()
+    return {n: p for n, p in out.items() if p}

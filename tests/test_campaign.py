@@ -65,6 +65,67 @@ def test_schedule_idempotent_ids(spark):
     assert r3["campaign_id"] != r1["campaign_id"]
 
 
+# quotes, apostrophes and an em dash: the api's inputs reach Spark as
+# bound parameters, never as SQL text
+AUDIENCE = 'fans of "Rock \'n\' Roll" — since \'69'
+EVENT = 'Joe\'s "Big" Night — Live'
+SEND_AT = "2025-06-01T10:00:00"
+
+
+def _reference_copy(audience: str, event: str, date: str, tone: str) -> dict:
+    """The reference's deterministic template (FIXTURES.md section 3)."""
+    return {
+        "email": {
+            "subject": f"You're invited: {event}",
+            "preview_text": f"Don't miss {event} on {date}",
+            "body": f"Hi there!\n\n{tone} — {event} is coming up on {date}. As one of our "
+                    f"{audience} fans, we wanted you to hear it first.\n\nGet your tickets now!",
+        },
+        "sms": {"body": f"{event} — {date}. Get your tickets now!"},
+    }
+
+
+@pytest.mark.parametrize("tone, used", [("casual", "casual"), ("exclusive", "exclusive"),
+                                        ("BOGUS", "enthusiastic")])
+def test_api_copy_is_the_reference_template(spark, tone, used):
+    from hive_feature_demo_spark.api import generate_campaign_copy
+
+    got = generate_campaign_copy(spark, AUDIENCE, EVENT, "2025-06-21", tone=tone)
+    assert got == _reference_copy(AUDIENCE, EVENT, "2025-06-21", used)
+
+
+@pytest.mark.parametrize("segment_id, size", [("seg_1a2b3c4d", 2**40), (None, 42)])
+def test_api_schedule_is_the_reference_record(spark, segment_id, size):
+    """``cmp_`` + 8 hex of sha256 over ``segment_id|event|send_at``; a
+    ``None`` segment id is skipped by ``concat_ws``, as it always was."""
+    import hashlib
+
+    from hive_feature_demo_spark.api import schedule_campaign
+
+    content = "|".join(x for x in (segment_id, EVENT, SEND_AT) if x is not None)
+    got = schedule_campaign(spark, segment_id, EVENT, size, SEND_AT)
+    assert got == {
+        "campaign_id": "cmp_" + hashlib.sha256(content.encode()).hexdigest()[:8],
+        "segment_id": segment_id,
+        "event_name": EVENT,
+        "audience_size": size,
+        "send_at": SEND_AT,
+        "status": "scheduled",
+    }
+
+
+def test_api_copy_and_schedule_start_no_job(spark, count_jobs):
+    """The one-row input is an inline VALUES relation that Catalyst folds
+    with the template into a local relation: no Spark job per call."""
+    from hive_feature_demo_spark.api import generate_campaign_copy, schedule_campaign
+
+    _, copy_jobs = count_jobs(
+        lambda: generate_campaign_copy(spark, AUDIENCE, EVENT, "2025-06-21", tone="casual"))
+    _, schedule_jobs = count_jobs(
+        lambda: schedule_campaign(spark, "seg_1a2b3c4d", EVENT, 42, SEND_AT))
+    assert (copy_jobs, schedule_jobs) == (0, 0)
+
+
 def test_llm_generate_mock_model_with_fallback(spark):
     """LLM mode: an Arrow-batched mock model answers valid JSON for even
     ids and garbage for odd ids; parsed rows keep the model reply, garbage

@@ -54,3 +54,40 @@ def test_asof_join_null_value_column(spark):
     ).collect()[0]
     assert row["price"] is None          # the t=20 row won, null and all
     assert row["asof_time"] == t(20)     # internally consistent pair
+
+
+def test_q284_matches_oracle_on_empty_embeddings(spark, sf_dir, tmp_path):
+    """A zero-row embeddings table replays zero micro-batches: the replay
+    writes no r= directory and foreachBatch no partials, and q284 still
+    matches the oracle (no rows)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from tests.oracle import variant_problems
+
+    empty = pq.read_table(os.path.join(sf_dir, "embeddings.parquet")).slice(0, 0)
+    names = ["q284_incremental_gram"]
+    assert variant_problems(spark, sf_dir, str(tmp_path / "v"), {"embeddings": empty}, names) == {}
+
+
+def test_q171_skips_null_values_and_users(spark, sf_dir, tmp_path):
+    """With 1 in 20 event values NULL (and 1 in 20 user ids, other rows),
+    q171's grouped-map sums and distinct-user counts skip them as SQL's
+    SUM and COUNT(DISTINCT) do, instead of summing NaN as -2^63 cents."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from tests.oracle import variant_problems
+
+    events = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    for name, offset in (("value", 0), ("user_id", 7)):
+        col = events.schema.get_field_index(name)
+        mask = pa.array([i % 20 == offset for i in range(events.num_rows)])
+        nulled = pc.if_else(mask, pa.scalar(None, events.schema.field(col).type), events.column(col))
+        events = events.set_column(col, name, nulled)
+    names = ["q171_applyinarrow_groupstats"]
+    assert variant_problems(spark, sf_dir, str(tmp_path / "v"), {"events": events}, names) == {}

@@ -189,6 +189,46 @@ def test_stats_single_row_shape(fans_df):
     assert df.count() == 1
 
 
+def test_query_crm_runs_one_job(fans_df, count_jobs):
+    """One scan per call: the stats are observed on the job that collects
+    the preview, below its sort and limit, so with no filters the count
+    is all 80 fans, not the 5 previewed."""
+    res, jobs = count_jobs(lambda: segment_query(fans_df, SegmentFilters(), REF_TODAY))
+    assert jobs == 1
+    assert res["count"] == 80 and len(res["fans"]) == 5
+
+
+@pytest.mark.parametrize(
+    "f",
+    [
+        SegmentFilters(),
+        SegmentFilters(genres=("jazz",), min_months_since_purchase=3),
+        SegmentFilters(city="chic"),
+        SegmentFilters(min_total_spent=500, max_months_since_purchase=12),
+        SegmentFilters(genres=("polka",)),
+    ],
+)
+def test_query_crm_stats_equal_segment_stats(fans_df, f):
+    res = segment_query(fans_df, f, REF_TODAY)
+    stats = segment_stats(fans_df, f, REF_TODAY).first().asDict()
+    assert {k: res[k] for k in stats} == stats
+
+
+def test_query_crm_concurrent_calls_keep_their_own_stats(fans_df):
+    """Concurrent calls on six threads (perfbench's warm-up runs three at
+    once) each read their own observation, never another call's."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    filters = [SegmentFilters(genres=("jazz",)), SegmentFilters(city="chic"),
+               SegmentFilters(min_total_spent=500)]
+    models = [model_query(FANS, f, REF_TODAY) for f in filters]
+    assert len({m["count"] for m in models}) == 3  # a swapped answer shows
+    with ThreadPoolExecutor(6) as pool:
+        got = list(pool.map(lambda f: segment_query(fans_df, f, REF_TODAY), filters * 3, timeout=300))
+    for res, model in zip(got, models * 3):
+        _assert_match(res, model)
+
+
 def test_api_facade_matches_reference_tool_shapes(spark, fans_df):
     """The drop-in api module: same signatures and return shapes as the
     reference's three tools (tools.py:37-185)."""

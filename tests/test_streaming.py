@@ -652,26 +652,14 @@ def test_q322_reads_its_version_boundary_once(spark, sf_dir, monkeypatch):
 # ---------------------------------------------------------------------------
 
 
-def test_flush_sentinel_starts_no_job(spark, sf_dir):
+def test_flush_sentinel_starts_no_job(spark, sf_dir, count_jobs):
     """Building the sentinel-unioned stream starts no Spark job beyond the
     events stream's own footer probe: the sentinel is a constant row."""
-    import uuid
-
     path = os.path.join(sf_dir, "events.parquet")
-    sc = spark.sparkContext
-
-    def jobs(build) -> int:
-        sc.setJobGroup(group := f"probe-{uuid.uuid4()}", "job count")
-        try:
-            build()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker lags the bus
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    probe = jobs(lambda: ops.events_stream(spark, path))
+    _, probe = count_jobs(lambda: ops.events_stream(spark, path))
     assert probe >= 1  # the counter does see the probe's job
-    assert jobs(lambda: ops.with_flush_sentinel(ops.events_stream(spark, path))) == probe
+    _, jobs = count_jobs(lambda: ops.with_flush_sentinel(ops.events_stream(spark, path)))
+    assert jobs == probe
 
 
 def _oracle_problems(spark, sf_dir, tmp_path, events, names=None) -> dict:
@@ -679,25 +667,13 @@ def _oracle_problems(spark, sf_dir, tmp_path, events, names=None) -> dict:
     on a copy of ``sf_dir`` whose events table is the pyarrow ``events``."""
     import inspect
 
-    import pyarrow.parquet as pq
-
     from hive_feature_demo_spark.plans import REGISTRY
-    from tests.oracle import compare, duckdb_con
+    from tests.oracle import variant_problems
 
     if names is None:  # every query that closes its windows with the sentinel
         names = [n for n, q in REGISTRY.items() if "with_flush_sentinel" in inspect.getsource(q.fn)]
         assert len(names) == 10, names
-    sf = str(tmp_path / "variant")
-    os.makedirs(sf)
-    for f in set(os.listdir(sf_dir)) - {"events.parquet"}:
-        os.symlink(os.path.join(sf_dir, f), os.path.join(sf, f))
-    pq.write_table(events, os.path.join(sf, "events.parquet"))
-    con = duckdb_con(sf)
-    try:
-        out = {n: compare(REGISTRY[n].fn(spark, sf), con, REGISTRY[n].oracle) for n in names}
-    finally:
-        con.close()
-    return {n: p for n, p in out.items() if p}
+    return variant_problems(spark, sf_dir, str(tmp_path / "variant"), {"events": events}, names)
 
 
 def test_sentinel_queries_match_oracle_on_empty_events(spark, sf_dir, tmp_path):
