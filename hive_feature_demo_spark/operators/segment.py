@@ -140,10 +140,10 @@ def build_predicate(filters: SegmentFilters, today: dt.date) -> Column:
 
 
 def _stats_aggs() -> list[Column]:
-    """A7/A8 aggregates over matched fans: ``count`` plus the two raw
-    averages ``_avg_spent`` / ``_open_rate`` (NULL when nothing matched).
+    """A7/A8 aggregates over matched fans: ``count``, ``avg_spent`` and
+    ``open_rate``; the averages read 0.0 when nothing matched (A9).
 
-    The one definition of the average, shared by :func:`segment_stats`'
+    The one definition of the stats, shared by :func:`segment_stats`'
     aggregate and :func:`segment_query`'s observation.
     """
 
@@ -151,12 +151,13 @@ def _stats_aggs() -> list[Column]:
         # exact decimal sum -> average -> HALF_EVEN round: deterministic
         # under any partitioning (a distributed float avg is order-dependent
         # in the last ulp, which flips banker's rounding on .005 boundaries)
-        return money(F.sum(F.col(col).cast("decimal(25,10)")) / F.count(col)).cast("double")
+        avg = money(F.sum(F.col(col).cast("decimal(25,10)")) / F.count(col)).cast("double")
+        return F.coalesce(avg, F.lit(0.0))
 
     return [
         F.count("*").alias("count"),
-        _avg("total_spent").alias("_avg_spent"),
-        _avg("email_open_rate").alias("_open_rate"),
+        _avg("total_spent").alias("avg_spent"),
+        _avg("email_open_rate").alias("open_rate"),
     ]
 
 
@@ -170,12 +171,11 @@ def segment_stats(fans: DataFrame, filters: SegmentFilters, today: dt.date) -> D
     """
     seg_id = segment_id_for(filters, today)
     agg = fans.filter(build_predicate(filters, today)).agg(*_stats_aggs())
-    nonzero = F.col("count") > 0
     return agg.select(
         "count",
-        F.when(nonzero, F.lit(seg_id)).otherwise(F.lit("")).alias("segment_id"),
-        F.coalesce(F.col("_avg_spent"), F.lit(0.0)).alias("avg_spent"),
-        F.coalesce(F.col("_open_rate"), F.lit(0.0)).alias("open_rate"),
+        F.when(F.col("count") > 0, F.lit(seg_id)).otherwise(F.lit("")).alias("segment_id"),
+        "avg_spent",
+        "open_rate",
     )
 
 
@@ -206,17 +206,18 @@ def segment_query(
     """
     obs = Observation()
     matched = fans.filter(build_predicate(filters, today)).observe(obs, *_stats_aggs())
-    preview = [r.asDict() for r in _first_by_id(matched, limit).collect()]
+    # a LIMIT 0 plan folds to an empty relation, dropping the observation
+    # with it, so limit=0 collects one row and previews none of it
+    rows = _first_by_id(matched, limit or 1).collect()[:limit]
     stats = obs.get
     if stats["count"] == 0:
         return {"count": 0, "segment_id": "", "avg_spent": 0, "open_rate": 0, "fans": []}
-    # NULL averages read 0.0, as segment_stats' coalesce makes them
     return {
         "count": stats["count"],
         "segment_id": segment_id_for(filters, today),
-        "avg_spent": 0.0 if stats["_avg_spent"] is None else stats["_avg_spent"],
-        "open_rate": 0.0 if stats["_open_rate"] is None else stats["_open_rate"],
-        "fans": preview,
+        "avg_spent": stats["avg_spent"],
+        "open_rate": stats["open_rate"],
+        "fans": [r.asDict() for r in rows],
     }
 
 

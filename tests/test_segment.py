@@ -189,13 +189,16 @@ def test_stats_single_row_shape(fans_df):
     assert df.count() == 1
 
 
-def test_query_crm_runs_one_job(fans_df, count_jobs):
+@pytest.mark.parametrize("limit", [5, 0])
+def test_query_crm_runs_one_job(fans_df, count_jobs, limit):
     """One scan per call: the stats are observed on the job that collects
     the preview, below its sort and limit, so with no filters the count
-    is all 80 fans, not the 5 previewed."""
-    res, jobs = count_jobs(lambda: segment_query(fans_df, SegmentFilters(), REF_TODAY))
+    is all 80 fans, not the ``limit`` previewed. ``limit=0`` keeps its
+    stats too (a LIMIT 0 plan folds to an empty relation, observation and
+    all)."""
+    res, jobs = count_jobs(lambda: segment_query(fans_df, SegmentFilters(), REF_TODAY, limit))
     assert jobs == 1
-    assert res["count"] == 80 and len(res["fans"]) == 5
+    assert res["count"] == 80 and len(res["fans"]) == limit
 
 
 @pytest.mark.parametrize(
