@@ -14,10 +14,12 @@ hands us bare parquet dirs per scale factor.
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TESTDATA_TABLES = (
     "region",
@@ -48,7 +50,8 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # µs-native engine reading the same file.
 _RUNTIME_CONFS = {
     # events.parquet stores INT64 TIMESTAMP(NANOS), which Spark's reader
-    # rejects unless told to surface it as long (converted in _normalize)
+    # rejects unless told to surface it as long (normalize_event_times
+    # converts it)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.parquet.int96RebaseModeInRead": "CORRECTED",
@@ -79,21 +82,18 @@ def ensure_session_confs(spark: SparkSession) -> None:
 
 
 def register_testdata(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view; return name -> DataFrame.
+    """Register every testdata table (read by :func:`table`) as a temp view;
+    return name -> DataFrame. Starts no Spark job.
 
     Parquet scans get predicate pushdown + column pruning from Catalyst for
     free; no caching here (at 100 TB you cannot cache the fact tables, and
     at test scale Spark's parquet reader is already fast).
     """
-    ensure_session_confs(spark)
     out: dict[str, DataFrame] = {}
     for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        df = _normalize(spark.read.parquet(path))
-        df.createOrReplaceTempView(name)
-        out[name] = df
+        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
+            out[name] = table(spark, sf_dir, name)
+            out[name].createOrReplaceTempView(name)
     return out
 
 
@@ -124,7 +124,7 @@ def register_hive_tables(
         # spark.table("db.events").ts is a session-zone timestamp here
         # exactly as in register_testdata
         raw = spark.table(f"{database}.{name}")
-        if _needs_normalize(raw):
+        if any(_ts_convert_sql(f) for f in raw.schema.fields):
             if not spark.catalog.tableExists(f"{database}.{name}_raw"):
                 spark.sql(
                     f"ALTER TABLE {database}.{name} RENAME TO {database}.{name}_raw"
@@ -143,10 +143,48 @@ def register_hive_tables(
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table directly (no view registration needed)."""
-    ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    return _normalize(df)
+    """Read one testdata table directly (no view registration needed),
+    under the schema its footer declares (:func:`parquet_schema`), so
+    building the read starts no Spark job."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return normalize_event_times(spark.read.schema(parquet_schema(path)).parquet(path))
+
+
+def parquet_schema(path: str) -> T.StructType:
+    """Spark schema of stored parquet data, read from one footer: no
+    Spark job, where ``spark.read.parquet(path)`` starts one to infer it.
+
+    ``path`` is a parquet file, a directory of them or a glob of either;
+    the first data file in name order speaks for all, as one file does for
+    Spark's inference without ``mergeSchema``. Types map as that inference
+    maps them: ``from_arrow_schema`` with tz-naive timestamps as
+    TIMESTAMP_NTZ, except that Arrow reads both INT64 TIMESTAMP(NANOS) and
+    INT96 as ``timestamp[ns]``, where Spark gives bigint (``nanosAsLong``,
+    ``_RUNTIME_CONFS``) and TIMESTAMP.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    footer = pq.read_metadata(_first_data_file(path)).schema
+    int64 = {footer.column(i).path for i in range(len(footer)) if footer.column(i).physical_type == "INT64"}
+    arrow = footer.to_arrow_schema()
+    nanos = {f.name for f in arrow if pa.types.is_timestamp(f.type) and f.type.unit == "ns"}
+    return T.StructType([
+        T.StructField(f.name, T.LongType() if f.name in int64 else T.TimestampType(), f.nullable)
+        if f.name in nanos else f
+        for f in from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+    ])
+
+
+def _first_data_file(path: str) -> str:
+    """The file ``path`` names, else the first file of a directory or of a
+    glob's matches, skipping ``_``/``.`` names as Spark's listing does."""
+    for hit in sorted(glob.glob(path)):
+        for f in [hit] if os.path.isfile(hit) else sorted(glob.glob(os.path.join(hit, "[!_.]*"))):
+            if os.path.isfile(f):
+                return f
+    raise FileNotFoundError(f"no parquet data file at {path}")
 
 
 def _ts_convert_sql(field) -> str | None:
@@ -166,32 +204,18 @@ def _ts_convert_sql(field) -> str | None:
       the session zone is pinned UTC (``_RUNTIME_CONFS``);
     - TIMESTAMP (tz-aware µs) -> already canonical, no-op.
     """
-    md = field.metadata or {}
     t = field.dataType.simpleString()
-    if bool(md.get("__nanos_as_long__")) or (field.name == "ts" and t == "bigint"):
+    if field.name == "ts" and t == "bigint":
         return f"timestamp_micros({field.name} div 1000)"
     if t == "timestamp_ntz":
         return f"cast({field.name} as timestamp)"
     return None
 
 
-def _needs_normalize(df: DataFrame) -> bool:
-    return any(_ts_convert_sql(f) is not None for f in df.schema.fields)
-
-
-def _normalize(df: DataFrame) -> DataFrame:
-    """Normalize every stored event-time encoding to session-zone TIMESTAMP
-    (see ``_ts_convert_sql`` for the supported encodings)."""
-    for field in df.schema.fields:
-        expr = _ts_convert_sql(field)
-        if expr is not None:
-            df = df.withColumn(field.name, F.expr(expr))
-    return df
-
-
 def normalize_event_times(df: DataFrame) -> DataFrame:
-    """Public alias of :func:`_normalize` for non-catalog readers (the
-    streaming file source probes the footer, then applies this).
+    """Normalize every stored event-time encoding to session-zone TIMESTAMP
+    (see ``_ts_convert_sql`` for the supported encodings); :func:`table`
+    and the streaming file source apply it to what they read.
 
     Pins the session confs FIRST: Spark's ``ResolveTimeZone`` rule stamps
     the session timezone into timezone-aware expressions at ANALYSIS time,
@@ -203,7 +227,11 @@ def normalize_event_times(df: DataFrame) -> DataFrame:
     offset — found by the r10 TZ=Asia/Kolkata sweep (9 streaming queries,
     −5:30 on every window boundary)."""
     ensure_session_confs(df.sparkSession)
-    return _normalize(df)
+    for field in df.schema.fields:
+        expr = _ts_convert_sql(field)
+        if expr is not None:
+            df = df.withColumn(field.name, F.expr(expr))
+    return df
 
 
 def analyze_tables(

@@ -1904,9 +1904,6 @@ def q282_seasonal_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="sources",
 )
 def q283_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from hive_feature_demo_spark.plans.engine_features import (
         _snapshot_commit,
         _snapshot_read,
@@ -1914,18 +1911,8 @@ def q283_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = table(spark, sf_dir, "orders")
     base = scratch_dir(prefix="q283_snap_")
-    d1 = os.path.join(base, "commit-1")
-    d2 = os.path.join(base, "commit-2")
-    o.filter(F.col("o_orderdate") < "1998-01-01").write.parquet(d1)
-    o.filter(F.col("o_orderdate") >= "1998-01-01").write.parquet(d2)
-
-    def data_files(d: str) -> list[str]:
-        return [
-            os.path.join(d, f) for f in sorted(os.listdir(d)) if f.endswith(".parquet")
-        ]
-
-    _snapshot_commit(base, data_files(d1), version=1)
-    _snapshot_commit(base, data_files(d1) + data_files(d2), version=2)
+    _snapshot_commit(base, 1, o.filter(F.col("o_orderdate") < "1998-01-01"))
+    _snapshot_commit(base, 2, o.filter(F.col("o_orderdate") >= "1998-01-01"))
     v1 = _snapshot_read(spark, base, 1)
     v2 = _snapshot_read(spark, base, 2)
     delta = v2.join(
@@ -2824,10 +2811,10 @@ def q293_embedding_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q294_trending_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    lo, hi = d.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
-    mid = (lo + hi) // 2
-    inst = d.select(
-        F.when(F.col("doc_id") <= mid, 1).otherwise(2).alias("half"),
+    # midpoint as a one-row crossJoin, not a collect: no build-time job
+    mid = d.agg(F.expr("(min(doc_id) + max(doc_id)) div 2").alias("mid"))
+    inst = d.crossJoin(F.broadcast(mid)).select(
+        F.when(F.col("doc_id") <= F.col("mid"), 1).otherwise(2).alias("half"),
         F.explode(
             F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), F.lit(0))
         ).alias("term"),
@@ -3138,14 +3125,18 @@ def q297_mixture_rebalance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q298_binned_ks_price_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
-    lo, hi = o.agg(F.min("o_totalprice"), F.max("o_totalprice")).collect()[0]
-    step = (hi - lo) / 1024.0
-    binned = o.select(
+    # grid origin and step as a one-row crossJoin, not a collect: no
+    # build-time job, and empty input gives DuckDB's one all-NULL row
+    bounds = o.agg(
+        F.min("o_totalprice").alias("lo"),
+        ((F.max("o_totalprice") - F.min("o_totalprice")) / 1024.0).alias("step"),
+    )
+    binned = o.crossJoin(F.broadcast(bounds)).select(
         F.when(F.col("o_orderdate") < _H_CUT, 1).otherwise(2).alias("half"),
         F.least(
             F.lit(1023),
             F.greatest(
-                F.lit(0), F.floor((F.col("o_totalprice") - F.lit(lo)) / F.lit(step))
+                F.lit(0), F.floor((F.col("o_totalprice") - F.col("lo")) / F.col("step"))
             ),
         )
         .cast("long")

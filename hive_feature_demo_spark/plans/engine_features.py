@@ -13,10 +13,10 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from hive_feature_demo_spark.catalog import register_testdata, table
 from hive_feature_demo_spark.functions.numeric import (
@@ -30,7 +30,8 @@ from hive_feature_demo_spark.plans.registry import register
 # q200 — snapshot time travel over a manifest log (the mechanism behind
 # Delta/Iceberg versioned reads, reduced to its essence): every commit
 # writes new parquet files plus a manifest listing ALL files visible in
-# that version; reading @v loads exactly manifest v's files. Commit 1 =
+# that version and their schema; reading @v loads exactly manifest v's
+# files under that schema (no inference). Commit 1 =
 # orders before 1998; commit 2 appends the rest. The query reads BOTH
 # versions and reports per-version totals — the oracle reproduces them
 # from the date split. Scale: manifests are O(files) JSON on the side;
@@ -41,8 +42,18 @@ from hive_feature_demo_spark.plans.registry import register
 _CUT = "1998-01-01"
 
 
-def _snapshot_commit(base: str, files: list[str], version: int) -> None:
-    manifest = {"version": version, "files": files}
+def _snapshot_commit(base: str, version: int, rows: DataFrame) -> None:
+    """Append commit: write ``rows`` as new files, then manifest
+    ``version``, listing the previous version's files plus these, and
+    their schema."""
+    new_dir = os.path.join(base, f"commit-{version}")
+    rows.write.parquet(new_dir)
+    files = []
+    if version > 1:
+        with open(os.path.join(base, f"manifest-v{version - 1}.json")) as fh:
+            files = json.load(fh)["files"]
+    files += [os.path.join(new_dir, f) for f in sorted(os.listdir(new_dir)) if f.endswith(".parquet")]
+    manifest = {"version": version, "schema": rows.schema.jsonValue(), "files": files}
     with open(os.path.join(base, f"manifest-v{version}.json"), "w") as fh:
         json.dump(manifest, fh)
 
@@ -50,7 +61,8 @@ def _snapshot_commit(base: str, files: list[str], version: int) -> None:
 def _snapshot_read(spark: SparkSession, base: str, version: int) -> DataFrame:
     with open(os.path.join(base, f"manifest-v{version}.json")) as fh:
         manifest = json.load(fh)
-    return spark.read.parquet(*manifest["files"])
+    schema = T.StructType.fromJson(manifest["schema"])
+    return spark.read.schema(schema).parquet(*manifest["files"])
 
 
 @register(
@@ -72,19 +84,8 @@ def _snapshot_read(spark: SparkSession, base: str, version: int) -> DataFrame:
 def q200_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     base = scratch_dir(prefix="q200_snap_")
-    d1 = os.path.join(base, "commit-1")
-    d2 = os.path.join(base, "commit-2")
-    o.filter(F.col("o_orderdate") < _CUT).write.parquet(d1)
-    o.filter(F.col("o_orderdate") >= _CUT).write.parquet(d2)
-
-    def data_files(d: str) -> list[str]:
-        return [
-            os.path.join(d, f) for f in sorted(os.listdir(d))
-            if f.endswith(".parquet")
-        ]
-
-    _snapshot_commit(base, data_files(d1), version=1)
-    _snapshot_commit(base, data_files(d1) + data_files(d2), version=2)
+    _snapshot_commit(base, 1, o.filter(F.col("o_orderdate") < _CUT))
+    _snapshot_commit(base, 2, o.filter(F.col("o_orderdate") >= _CUT))
 
     outs = []
     for v in (1, 2):

@@ -10,7 +10,7 @@ from hive_feature_demo_spark.catalog import register_testdata, table
 from hive_feature_demo_spark.functions.numeric import round_det, sql_round_det
 from hive_feature_demo_spark.operators.relational_ext import asof_join, range_join
 from hive_feature_demo_spark.plans.registry import register
-from hive_feature_demo_spark.plans.segment import FANS_PARQUET
+from hive_feature_demo_spark.plans.segment import FANS_PARQUET, fans_table
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
@@ -376,7 +376,7 @@ def q57_ranking_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q58_fan_genre_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.operators.segment import explode_genres
 
-    fans = spark.read.parquet(FANS_PARQUET)
+    fans = fans_table(spark)
     return (
         explode_genres(fans)
         .groupBy("genre")
@@ -410,7 +410,7 @@ def q58_fan_genre_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q99_genre_filter_via_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_feature_demo_spark.operators.segment import explode_genres
 
-    fans = spark.read.parquet(FANS_PARQUET)
+    fans = fans_table(spark)
     fan_genre = explode_genres(fans)
     jazz_ids = fan_genre.filter(F.col("genre") == "jazz").select("fan_id")
     return (

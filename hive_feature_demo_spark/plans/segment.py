@@ -21,7 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_feature_demo_spark.catalog import table
+from hive_feature_demo_spark.catalog import parquet_schema, table
 from hive_feature_demo_spark.functions.numeric import money
 from hive_feature_demo_spark.functions.temporal import MONTH_DAYS, REF_TODAY, months_since
 from hive_feature_demo_spark.operators import segment as seg
@@ -38,8 +38,8 @@ _JAZZ_FILTERS = seg.SegmentFilters(genres=("jazz",), min_months_since_purchase=3
 _JAZZ_SEG_ID = seg.segment_id_for(_JAZZ_FILTERS, REF_TODAY)
 
 
-def _fans(spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(FANS_PARQUET)
+def fans_table(spark: SparkSession) -> DataFrame:
+    return spark.read.schema(parquet_schema(FANS_PARQUET)).parquet(FANS_PARQUET)
 
 
 # ---------------------------------------------------------------------------
@@ -64,7 +64,7 @@ def _fans(spark: SparkSession) -> DataFrame:
     category="segment",
 )
 def q16_segment_stats_fans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return seg.segment_stats(_fans(spark), _JAZZ_FILTERS, REF_TODAY)
+    return seg.segment_stats(fans_table(spark), _JAZZ_FILTERS, REF_TODAY)
 
 
 @register(
@@ -84,7 +84,7 @@ def q16_segment_stats_fans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q17_segment_preview_fans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A10/A11 preview; genres flattened to a string so both engines hash the
     # same scalar representation of the array column.
-    return seg.segment_preview(_fans(spark), _JAZZ_FILTERS, REF_TODAY).select(
+    return seg.segment_preview(fans_table(spark), _JAZZ_FILTERS, REF_TODAY).select(
         "id", "first_name", "last_name", "city", "state",
         F.array_join("genres", ",").alias("genres_str"),
         "last_purchase_date", "total_spent", "email_open_rate",
@@ -289,7 +289,7 @@ def q21_schedule_campaign(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="segment",
 )
 def q83_fan_display_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fans = _fans(spark)
+    fans = fans_table(spark)
     days = F.datediff(F.lit(REF_TODAY.isoformat()).cast("date"), "last_purchase_date")
     card = F.concat_ws(" — ", F.concat_ws(" ", "first_name", "last_name"), F.col("city"))
     return (
@@ -435,7 +435,7 @@ _NL_ORACLE = "\n    UNION ALL\n".join(
     category="segment",
 )
 def q122_nl_segment_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fans = _fans(spark)
+    fans = fans_table(spark)
     out = None
     for i, text in enumerate(NL_REQUESTS, start=1):
         filters = nlquery.parse_nl_query(text)
@@ -504,7 +504,7 @@ _FD_DESC = "jazz fans who haven't bought tickets in the last 3 months"
 )
 def q303_readme_front_door(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters = nlquery.parse_nl_query(README_PROMPT)
-    stats = seg.segment_stats(_fans(spark), filters, REF_TODAY)
+    stats = seg.segment_stats(fans_table(spark), filters, REF_TODAY)
     req = stats.select(
         "segment_id",
         F.col("count").cast("long").alias("audience_size"),
@@ -594,7 +594,7 @@ _CACHE_ORACLE = "\n    UNION ALL\n".join(
     category="segment",
 )
 def q313_segment_cache_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fans = _fans(spark)
+    fans = fans_table(spark)
     by_key: dict[str, list[int]] = {}
     filters_by_key: dict[str, seg.SegmentFilters] = {}
     for rid, f in _CACHE_REQS:
@@ -671,7 +671,7 @@ _CHAT_ORACLE = "\n    UNION ALL\n".join(
     category="segment",
 )
 def q324_chat_example_prompts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fans = _fans(spark)
+    fans = fans_table(spark)
     out = None
     for i, text in enumerate(CHAT_PROMPTS, start=1):
         filters = nlquery.parse_nl_query(text)
@@ -788,7 +788,7 @@ _AGENT_SKELETON_SQL = ",\n      ".join(
 )
 def q325_agent_event_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters = nlquery.parse_nl_query(README_PROMPT)
-    stats = seg.segment_stats(_fans(spark), filters, REF_TODAY)
+    stats = seg.segment_stats(fans_table(spark), filters, REF_TODAY)
     req = stats.select(
         "segment_id",
         F.col("count").cast("long").alias("audience_size"),

@@ -63,7 +63,7 @@ def q119_partitioned_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
         scratch_dir(prefix="hfd_q119_"), "orders_by_priority"
     )
     writers.write_partitioned(orders, out, ["o_orderpriority"])
-    back = spark.read.parquet(out)
+    back = spark.read.schema(orders.schema).parquet(out)
     # the filter on the partition column prunes at the directory listing —
     # .explain shows PartitionFilters, zero data files of 3-MEDIUM are read
     return (
@@ -158,7 +158,7 @@ def q128_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders")
     out = os.path.join(scratch_dir(prefix="hfd_q128_"), "orders_z")
     writers.write_zordered(orders, out, "o_custkey", "o_orderkey", n_files=8)
-    back = spark.read.parquet(out)
+    back = spark.read.schema(orders.schema).parquet(out)
     return (
         back.filter(
             F.col("o_custkey").between(100, 500)
@@ -275,7 +275,7 @@ def q135_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = table(spark, sf_dir, "lineitem")
     out = os.path.join(scratch_dir(prefix="hfd_q135_"), "lineitem_compact")
     writers.write_compacted(lineitem, out, target_file_mb=8)
-    back = spark.read.parquet(out)
+    back = spark.read.schema(lineitem.schema).parquet(out)
     return (
         back.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -318,7 +318,7 @@ def q145_dpp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = os.path.join(scratch_dir(prefix="hfd_q145_"), "lineitem_by_month")
     writers.write_partitioned(fact, out, partition_cols=["ship_month"])
-    back = spark.read.parquet(out)
+    back = spark.read.schema(fact.schema).parquet(out)
     dim = (
         lineitem.select(F.date_format("l_shipdate", "yyyy-MM").alias("ship_month"))
         .distinct()
@@ -496,15 +496,15 @@ def q165_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q170 — schema-evolution round trip: a dataset written in two generations
 # (generation 1 without o_orderpriority, generation 2 with it) is read
-# back under ``mergeSchema`` — the lake-scale reality that columns get
-# ADDED over time and historical files must surface them as NULL, not
-# break the read. The aggregate buckets gen-1 rows under '<missing>' via
-# coalesce; the oracle replays the generation split from the original
-# table, so a hash match proves (a) merged-footer schema resolution,
-# (b) NULL back-fill for pre-evolution files, (c) no row/value loss
-# across generations. (At 100 TB, mergeSchema's footer-merge cost is why
-# production catalogs pin the schema in a metastore — exercised in
-# tests/test_hive_metastore.py; this query checks the raw-path behavior.)
+# back under the evolved generation-2 schema — the lake-scale reality that
+# columns get ADDED over time and historical files must surface them as
+# NULL, not break the read. The aggregate buckets gen-1 rows under
+# '<missing>' via coalesce; the oracle replays the generation split from
+# the original table, so a hash match proves (a) a declared schema reads
+# files lacking one of its columns, (b) NULL back-fill for them, (c) no
+# row/value loss. The schema is declared as a metastore pins it
+# (tests/test_hive_metastore.py); ``mergeSchema`` would be a Spark job
+# over every footer at plan build.
 # ---------------------------------------------------------------------------
 
 
@@ -530,7 +530,7 @@ def q170_schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     gen2 = orders.filter(F.col("o_orderkey") % 2 != 0)
     gen1.write.mode("overwrite").parquet(out)
     gen2.write.mode("append").parquet(out)
-    back = spark.read.option("mergeSchema", "true").parquet(out)
+    back = spark.read.schema(orders.schema).parquet(out)
     return (
         back.groupBy(
             F.coalesce("o_orderpriority", F.lit("<missing>")).alias("priority")

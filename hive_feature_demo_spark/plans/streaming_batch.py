@@ -928,7 +928,7 @@ def q152_foreachbatch_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
         "event_id", "event_type", "value"
     )
     sops.run_foreach_batch_parquet(events, out_dir, ledger)
-    back = spark.read.parquet(out_dir)
+    back = spark.read.schema(events.schema).parquet(out_dir)
     return (
         back.groupBy("event_type")
         .agg(

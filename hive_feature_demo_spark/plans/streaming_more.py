@@ -164,7 +164,7 @@ def q192_streaming_update_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sops.run_foreach_batch(agg, write_batch, output_mode="update")
 
-    hist = spark.read.parquet(out_dir)
+    hist = spark.read.schema(agg.withColumn("batch_id", F.lit(0)).schema).parquet(out_dir)
     w = Window.partitionBy("event_type").orderBy(F.desc("batch_id"))
     return (
         hist.withColumn("rn", F.row_number().over(w))

@@ -134,7 +134,7 @@ def merge_upsert(
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     stage = os.path.join(wh, f"_staging_{target_table.replace('.', '_')}")
     merged.write.mode("overwrite").parquet(stage)
-    staged = spark.read.parquet(stage)
+    staged = spark.read.schema(merged.schema).parquet(stage)
     spark.sql(f"DROP TABLE {target_table}")
     staged.write.format("parquet").saveAsTable(target_table)
     shutil.rmtree(stage, ignore_errors=True)

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 #: Schema test fixtures write with (ts = epoch nanos as long). The stream
-#: reader itself no longer assumes this layout — it probes the footer.
+#: reader itself does not assume this layout — it reads the footer.
 EVENTS_RAW_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -46,28 +46,24 @@ def events_stream(
     The stored ``ts`` encoding has varied (INT64 nanos vs ``timestamp[us]``
     NTZ — see ``catalog._ts_convert_sql``), and a hardcoded read schema
     silently corrupts values when the encoding shifts (µs interpreted as ns
-    lands every event in January 1970 with no error). So: one driver-side
-    batch probe of the parquet footer picks the schema, and the shared
-    catalog normalizer applies the matching conversion.
+    lands every event in January 1970 with no error). So the stream reads
+    under the schema the parquet footer declares
+    (``catalog.parquet_schema``, no Spark job), and the shared catalog
+    normalizer applies the matching conversion.
 
     ``path`` is a directory (or glob) of parquet files, or one parquet
     file. Spark's file stream source only takes directories, so a file is
     streamed as its directory filtered to the file's name.
     """
-    from ..catalog import ensure_session_confs, normalize_event_times
+    from ..catalog import normalize_event_times, parquet_schema
 
+    schema = parquet_schema(path)
     opts = {}
     if os.path.isfile(path):
         path, opts["pathGlobFilter"] = os.path.split(path)
-    # confs BEFORE the probe: a virgin session can't read a TIMESTAMP(NANOS)
-    # footer without nanosAsLong, and the normalizer's NTZ cast must not be
-    # analyzed under a non-UTC host zone (see normalize_event_times)
-    ensure_session_confs(spark)
-    probed = spark.read.options(**opts).parquet(path).schema
-    reader = spark.readStream.options(**opts).schema(probed)
     if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return normalize_event_times(reader.parquet(path))
+        opts["maxFilesPerTrigger"] = max_files_per_trigger
+    return normalize_event_times(spark.readStream.options(**opts).schema(schema).parquet(path))
 
 
 def tumbling_counts(

@@ -17,6 +17,7 @@ from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from hive_feature_demo_spark.catalog import parquet_schema  # noqa: E402
 from hive_feature_demo_spark.plans import REGISTRY  # noqa: E402
 from hive_feature_demo_spark.plans.segment import FANS_PARQUET  # noqa: E402
 from hive_feature_demo_spark.session import get_spark  # noqa: E402
@@ -63,13 +64,12 @@ def _top_level_fields(schema: str) -> int:
 
 def table_widths(sf_dir: str) -> dict[str, int]:
     """Top-level column count of every ``<table>.parquet`` in ``sf_dir``
-    plus ``fans`` (data/fans.parquet), read from the parquet footers."""
-    import pyarrow.parquet as pq
-
+    plus ``fans`` (data/fans.parquet), from the footer schema the engine
+    reads them under (``catalog.parquet_schema``)."""
     paths = {f[: -len(".parquet")]: os.path.join(sf_dir, f)
              for f in os.listdir(sf_dir) if f.endswith(".parquet")}
     paths["fans"] = FANS_PARQUET
-    return {t: len(pq.read_schema(p).names) for t, p in sorted(paths.items())}
+    return {t: len(parquet_schema(p)) for t, p in sorted(paths.items())}
 
 
 def full_width_scans(

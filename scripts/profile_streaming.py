@@ -4,8 +4,7 @@ verdict ask #3): where do q69's ~3.2 s go?
 
 Splits one registered streaming query's wall into:
 
-  probe      batch footer-probe read of events.parquet (driver-side)
-  build      DataFrame construction (no execution)
+  build      DataFrame construction (no execution, no Spark job)
   run        writeStream start -> processAllAvailable -> stop
   batches    per-micro-batch durationMs + operator breakdown from the
              StreamingQueryProgress history (addBatch / getBatch /
@@ -31,25 +30,9 @@ from hive_feature_demo_spark.streaming import ops as sops  # noqa: E402
 
 
 def profile_q69(spark, sf_dir: str, tag: str) -> dict:
-    from hive_feature_demo_spark.catalog import (
-        ensure_session_confs,
-        normalize_event_times,
-    )
-
     out: dict = {}
     t0 = time.perf_counter()
-    ensure_session_confs(spark)
-    probed = (
-        spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir).schema
-    )
-    out["probe_sec"] = round(time.perf_counter() - t0, 3)
-
-    t0 = time.perf_counter()
-    events = normalize_event_times(
-        spark.readStream.schema(probed)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    events = sops.events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     joined = sops.click_purchase_join(
         events, horizon="30 minutes", watermark="10 minutes"
     )

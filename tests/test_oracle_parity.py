@@ -71,6 +71,29 @@ def test_q284_matches_oracle_on_empty_embeddings(spark, sf_dir, tmp_path):
     assert variant_problems(spark, sf_dir, str(tmp_path / "v"), {"embeddings": empty}, names) == {}
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["q119_partitioned_write_roundtrip", "q145_dpp_roundtrip", "q294_trending_terms",
+     "q298_binned_ks_price_drift"],
+)
+def test_matches_oracle_on_all_empty_tables(spark, sf_dir, tmp_path, name):
+    """With every table at zero rows these run and match the oracle. q119
+    and q145 read their partitioned round trip under the writer's schema
+    (an inferred read of the empty directory raises
+    UNABLE_TO_INFER_SCHEMA); q294 and q298 keep the table's min and max in
+    the plan (collected to the driver they were None + None and
+    None - None)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from hive_feature_demo_spark.catalog import TESTDATA_TABLES
+    from tests.oracle import variant_problems
+
+    empty = {t: pq.read_table(os.path.join(sf_dir, f"{t}.parquet")).slice(0, 0) for t in TESTDATA_TABLES}
+    assert variant_problems(spark, sf_dir, str(tmp_path / "v"), empty, [name]) == {}
+
+
 def test_q171_skips_null_values_and_users(spark, sf_dir, tmp_path):
     """With 1 in 20 event values NULL (and 1 in 20 user ids, other rows),
     q171's grouped-map sums and distinct-user counts skip them as SQL's

@@ -653,13 +653,11 @@ def test_q322_reads_its_version_boundary_once(spark, sf_dir, monkeypatch):
 
 
 def test_flush_sentinel_starts_no_job(spark, sf_dir, count_jobs):
-    """Building the sentinel-unioned stream starts no Spark job beyond the
-    events stream's own footer probe: the sentinel is a constant row."""
+    """Building the events stream starts no Spark job (its schema comes
+    from the footer), and neither does the sentinel: a constant row."""
     path = os.path.join(sf_dir, "events.parquet")
-    _, probe = count_jobs(lambda: ops.events_stream(spark, path))
-    assert probe >= 1  # the counter does see the probe's job
-    _, jobs = count_jobs(lambda: ops.with_flush_sentinel(ops.events_stream(spark, path)))
-    assert jobs == probe
+    assert count_jobs(lambda: ops.events_stream(spark, path))[1] == 0
+    assert count_jobs(lambda: ops.with_flush_sentinel(ops.events_stream(spark, path)))[1] == 0
 
 
 def _oracle_problems(spark, sf_dir, tmp_path, events, names=None) -> dict:

@@ -116,6 +116,25 @@ def _stream_minmax(spark, d):
     return row["lo"], row["hi"], row["n"]
 
 
+def test_footer_schema_matches_spark_inference(spark, sf_dir, encoded_dirs, millis_dir):
+    """``catalog.parquet_schema`` maps each footer to the schema Spark's
+    inference gives: every testdata table, data/fans.parquet and every ts
+    encoding (directory form), INT64 nanos as bigint and INT96 as
+    timestamp although Arrow reads both as timestamp[ns]."""
+    from hive_feature_demo_spark.plans.segment import FANS_PARQUET
+
+    paths = [os.path.join(sf_dir, f"{t}.parquet") for t in catalog.TESTDATA_TABLES]
+    paths += [FANS_PARQUET, *encoded_dirs.values(), millis_dir[0]]
+    for p in paths:
+        assert catalog.parquet_schema(p) == spark.read.parquet(p).schema, p
+
+
+def test_catalog_reads_start_no_job(spark, sf_dir, count_jobs):
+    """Reading a table's schema from its footer starts no Spark job."""
+    assert count_jobs(lambda: catalog.table(spark, sf_dir, "events"))[1] == 0
+    assert count_jobs(lambda: catalog.register_testdata(spark, sf_dir))[1] == 0
+
+
 def test_batch_reads_agree_across_encodings(spark, encoded_dirs):
     got = {k: _batch_minmax(spark, d) for k, d in encoded_dirs.items()}
     ref = got["us_ntz"]
